@@ -139,15 +139,21 @@ def cmd_run_day(args: argparse.Namespace,
 
     if not args.skip_rollup:
         # the cross-job handoff goes through the parquet just written —
-        # the rollup sees exactly what any downstream consumer would
-        tp = read_parquet(spark, f"{args.base}/cliqz_testpilot/v1")
-        tpt = read_parquet(spark, f"{args.base}/cliqz_testpilottest/v1")
+        # the rollup sees exactly what any downstream consumer would.
+        # Read back with the written frames' schemas: an empty dataset
+        # (a day whose testpilot and testpilottest clients do not
+        # overlap) leaves no file footer to infer a schema from
+        tp = read_parquet(spark, f"{args.base}/cliqz_testpilot/v1",
+                          schema=results["testpilot"].schema)
+        tpt = read_parquet(spark, f"{args.base}/cliqz_testpilottest/v1",
+                           schema=results["testpilottest"].schema)
         ms = read_parquet(spark, args.main_summary)
         rollup = profile_daily(tp, tpt, ms)
         write_parquet(rollup, f"{args.base}/cliqz_profile_daily/v1",
                       partition_by="submission_date")
         written["profile_daily"] = read_parquet(
-            spark, f"{args.base}/cliqz_profile_daily/v1").count()
+            spark, f"{args.base}/cliqz_profile_daily/v1",
+            schema=rollup.schema).count()
 
     for name, n in written.items():
         print(f"run-day {day}: {name} -> {n} rows")

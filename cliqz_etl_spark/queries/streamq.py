@@ -25,6 +25,9 @@ from cliqz_etl_spark.queries.sessions import _SESSION_CTE
 from cliqz_etl_spark.streaming.jobs import (
     click_purchase_join,
     dedup_stream,
+    drain,
+    run_to_memory,
+    run_to_parquet,
     running_user_totals,
     session_rollup,
 )
@@ -37,7 +40,7 @@ def _scoped_legacy_nanos(fn):
     query's whole build+drain span when the events layout is legacy nanos,
     and restore the previous value afterwards. Streams execute at
     ``start()``, not at ``readStream`` — so unlike the batch reader's
-    creation-time snapshot the conf must stay live until awaitTermination
+    creation-time snapshot the conf must stay live until the drain
     returns; a bare ``conf.set`` here used to leak session-wide and make
     any later nanos-annotated parquet read silently surface bigint."""
     @functools.wraps(fn)
@@ -79,61 +82,15 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
 
 
-def _state_partitions(spark: SparkSession, sf_dir: str) -> int:
-    """Size the stateful shuffle to the stream's volume: one state
-    partition per ~64 MiB of source, floored at 4 (the gate corpora are
-    tiny and the floor keeps per-batch bookkeeping bounded) and capped
-    at 2x the cluster's parallelism (beyond that extra partitions only
-    add state-store commits, they can't add concurrency). Partition
-    count never changes results, only task granularity — the same
-    sizing exercise as batch shuffle.partitions, made explicit because
-    streaming state makes the per-partition fixed cost much higher.
-
-    Floor 8 -> 4 (round 14): the per-microbatch fixed cost is provider
-    init + delta commits x partitions x stores (4 stores for a
-    stream-stream join), so halving the sub-256 MiB floor halves the
-    drain's fixed term. Interleaved A/B at sf0.1 (two passes, both
-    orders): left_outer_join 5.33/3.48 -> 2.64/3.79, daily_peak
-    3.09/2.72 -> 1.78/1.91, dedup 1.68/2.60 -> 1.50/1.61, funnel
-    2.48/2.42 -> 2.45/2.17 — floor 4 wins or ties 7 of 8; floor 2
-    regressed the funnel and was rejected. Volume-sized streams
-    (> 256 MiB source) are governed by the 64 MiB/partition term and
-    are unaffected."""
-    try:
-        size = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-    except OSError:
-        size = 0
-    cap = max(8, 2 * spark.sparkContext.defaultParallelism)
-    return max(4, min(size // (64 << 20), cap))
-
-
-def _drain(df: DataFrame, prefix: str, mode: str = "complete",
-           state_partitions: int | None = None) -> DataFrame:
-    """Run the bounded stream to completion into a memory sink.
-
-    ``state_partitions`` sizes the stateful shuffle for THIS stream: the
-    state store pays a fixed per-partition-per-microbatch cost (provider
-    init, commit, snapshot bookkeeping), so a bounded gate corpus drains
-    ~5x faster at 8 partitions than at the session's 32 (measured sf0.1:
-    tumbling-window agg 4.3 s -> 0.9 s). Registered queries pass the
-    volume-derived ``_state_partitions``; the bare default (4, matching
-    its floor) covers gate-scale corpora. Scoped to build+drain — streams
-    bake the conf in at start(), and the previous value is restored
-    before the (batch) caller continues, so batch plans keep the session
-    sizing."""
+def _drain(df: DataFrame, prefix: str, mode: str = "complete") -> DataFrame:
+    """Run the bounded stream to completion into a memory sink (through
+    ``jobs.drain``, which sizes its state partitions from the source) and
+    return the drained table."""
     from cliqz_etl_spark.operators.cache import track_temp_view
-    from cliqz_etl_spark.tables import scoped_conf
 
     spark = df.sparkSession
     name = f"{prefix}_{next(_SINK_IDS)}"
-    n = 4 if state_partitions is None else state_partitions
-    with scoped_conf(spark, "spark.sql.shuffle.partitions",
-                     str(n), default="32"):
-        (
-            df.writeStream.format("memory").queryName(name)
-            .outputMode(mode).trigger(availableNow=True)
-            .start().awaitTermination()
-        )
+    run_to_memory(df, name, mode)
     out = spark.table(name)
     out.schema  # force analysis NOW: the plan must bind the sink relation
     # before release_all() (bench/oracle runners) drops the temp view —
@@ -174,8 +131,7 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", "n_events", "total_cents",
         )
     )
-    return _drain(windowed, "hourly_counts",
-                  state_partitions=_state_partitions(spark, sf_dir))
+    return _drain(windowed, "hourly_counts")
 
 
 @query(
@@ -198,8 +154,7 @@ def streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
         "n_events",
     )
-    return _drain(sessions, "sessions",
-                  state_partitions=_state_partitions(spark, sf_dir))
+    return _drain(sessions, "sessions")
 
 
 @query(
@@ -229,8 +184,7 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row — at production volume the sink is a table/topic and this is
     # the difference between shipping the fact and shipping the payload
     deduped = _drain(dedup_stream(doubled).select("event_type", "value"),
-                     "dedup", mode="append",
-                     state_partitions=_state_partitions(spark, sf_dir))
+                     "dedup", mode="append")
     return deduped.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
@@ -260,8 +214,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     clicks = _event_stream(spark, sf_dir).where(F.col("event_type") == "click")
     purchases = _event_stream(spark, sf_dir).where(F.col("event_type") == "purchase")
     return _drain(click_purchase_join(clicks, purchases), "ssjoin",
-                  mode="append",
-                  state_partitions=_state_partitions(spark, sf_dir))
+                  mode="append")
 
 
 @query(
@@ -279,8 +232,7 @@ def streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     final Update-mode emission per user must equal the batch aggregate
     exactly, verifying the programmable-state path end to end."""
     ev = _event_stream(spark, sf_dir)
-    return _drain(running_user_totals(ev), "running_totals", mode="update",
-                  state_partitions=_state_partitions(spark, sf_dir))
+    return _drain(running_user_totals(ev), "running_totals", mode="update")
 
 
 @query(
@@ -310,8 +262,7 @@ def streaming_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("segment", "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    return _drain(counts, "enriched", mode="complete",
-                  state_partitions=_state_partitions(spark, sf_dir))
+    return _drain(counts, "enriched", mode="complete")
 
 
 @query(
@@ -338,18 +289,14 @@ def streaming_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from cliqz_etl_spark.streaming.jobs import (run_to_upsert,
-                                                running_user_totals)
+    from cliqz_etl_spark.streaming.jobs import run_to_upsert
 
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     root = os.path.join(tempfile.gettempdir(), f"cliqz_upsert_{tag}")
     shutil.rmtree(root, ignore_errors=True)
     base, ckpt = f"{root}/table", f"{root}/ckpt"
     ev = _event_stream(spark, sf_dir)
-    from cliqz_etl_spark.tables import scoped_conf
-    with scoped_conf(spark, "spark.sql.shuffle.partitions",
-                     str(_state_partitions(spark, sf_dir)), default="32"):
-        run_to_upsert(running_user_totals(ev), base, ckpt, "user_id")
+    run_to_upsert(running_user_totals(ev), base, ckpt, "user_id")
     if not os.path.isdir(base):  # empty corpus: no batch ever wrote
         return spark.createDataFrame(
             [], "user_id long, n_events long, total_cents long")
@@ -471,10 +418,7 @@ def synthetic_stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                .option("n_rows", _SYNS_N)
                .option("rows_per_batch", _SYNS_BATCH)
                .option("n_users", 100).load())
-        (src.writeStream.format("parquet")
-         .option("path", out).option("checkpointLocation", ckpt)
-         .outputMode("append").trigger(availableNow=True)
-         .start().awaitTermination())
+        run_to_parquet(src, out, ckpt)
     return (
         spark.read.parquet(out)
         .groupBy("event_type")
@@ -512,13 +456,8 @@ def state_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(root, ignore_errors=True)
     ev = _event_stream(spark, sf_dir)
     agg = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-    from cliqz_etl_spark.tables import scoped_conf
-    with scoped_conf(spark, "spark.sql.shuffle.partitions",
-                     str(_state_partitions(spark, sf_dir)), default="32"):
-        (agg.writeStream.format("noop")
-         .option("checkpointLocation", f"{root}/ckpt")
-         .outputMode("update").trigger(availableNow=True)
-         .start().awaitTermination())
+    drain(agg, lambda w: w.format("noop")
+          .option("checkpointLocation", f"{root}/ckpt").outputMode("update"))
     state = spark.read.format("statestore").load(f"{root}/ckpt")
     return state.select(
         F.col("key.user_id").alias("user_id"),
@@ -580,10 +519,8 @@ def stream_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                .option("n_rows", _SYNS_N)
                .option("rows_per_batch", _SYNS_BATCH)
                .option("n_users", 100).load())
-        (src.writeStream.format("jsonl_shards").option("path", out)
-         .option("checkpointLocation", ckpt)
-         .outputMode("append").trigger(availableNow=True)
-         .start().awaitTermination())
+        drain(src, lambda w: w.format("jsonl_shards").option("path", out)
+              .option("checkpointLocation", ckpt).outputMode("append"))
     back = (spark.read
             .schema("event_id long, ts string, user_id long, "
                     "event_type string, value double")
@@ -676,8 +613,7 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("purchase_ts").cast("long") - F.col("click_ts").cast("long"))
         .cast("long").alias("gap_sec"),
     )
-    return _drain(j, "lojoin", mode="append",
-                  state_partitions=_state_partitions(spark, sf_dir))
+    return _drain(j, "lojoin", mode="append")
 
 
 @query(
@@ -733,8 +669,7 @@ def streaming_daily_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.date_format(F.col("d.start"), "yyyy-MM-dd").alias("day"),
                 "event_type", "peak_hourly", "n_daily")
     )
-    return _drain(daily, "daily_peak", mode="append",
-                  state_partitions=_state_partitions(spark, sf_dir))
+    return _drain(daily, "daily_peak", mode="append")
 
 
 @query(
@@ -759,8 +694,8 @@ def streaming_progress_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     state rows must equal the distinct key count (NULL key included —
     a groupBy state row addresses NULL like any other key).
 
-    Listener events are delivered on a separate bus thread AFTER
-    awaitTermination can return, so the drain polls until the readings
+    Listener events are delivered on a separate bus thread and can
+    arrive after the drain returns, so the query polls until the readings
     go stable (bounded wait) before reporting — the part naive listener
     consumers get wrong. Complete-mode keyed count keeps state =
     |keys|, constant per key regardless of stream length."""
@@ -769,7 +704,6 @@ def streaming_progress_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming import StreamingQueryListener
 
     from cliqz_etl_spark.operators.cache import track_temp_view
-    from cliqz_etl_spark.tables import scoped_conf
 
     class _Audit(StreamingQueryListener):
         """Accumulates progress for ONE query, matched by name: the
@@ -808,11 +742,7 @@ def streaming_progress_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     listener = _Audit(name)
     spark.streams.addListener(listener)
     try:
-        with scoped_conf(spark, "spark.sql.shuffle.partitions",
-                         str(_state_partitions(spark, sf_dir)), default="32"):
-            (agg.writeStream.format("memory").queryName(name)
-             .outputMode("complete").trigger(availableNow=True)
-             .start().awaitTermination())
+        run_to_memory(agg, name, "complete")
         # listener bus is async: wait for the readings to stabilize
         # (two consecutive identical non-empty snapshots), bounded
         prev = None
@@ -852,8 +782,7 @@ def streaming_sequence_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                  & F.col("event_type").isin("signup", "view", "purchase"))
           .select("user_id", F.unix_micros("ts").alias("tsu"),
                   F.col("event_type").alias("et")))
-    drained = _drain(funnel_progress(ev), "seqfunnel", mode="update",
-                     state_partitions=_state_partitions(spark, sf_dir))
+    drained = _drain(funnel_progress(ev), "seqfunnel", mode="update")
     w = Window.partitionBy("user_id")
     latest = (drained
               .withColumn("mx", F.max("n_seen").over(w))
@@ -902,8 +831,7 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
           .where(F.col("user_id").isNotNull())
           .select("user_id", (F.col("user_id") % SHH_BUCKETS).alias("bucket")))
     drained = _drain(mg_candidate_state(ev, SHH_K, SHH_BUCKETS), "shh",
-                     mode="update",
-                     state_partitions=_state_partitions(spark, sf_dir))
+                     mode="update")
     w = Window.partitionBy("bucket")
     cand = (drained.withColumn("mx", F.max("n_seen").over(w))
             .where(F.col("n_seen") == F.col("mx"))
@@ -978,9 +906,8 @@ def streaming_dedup_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  N_PERM, N_BANDS, SHINGLE_K)
          .write.mode("append").parquet(out))
 
-    (batch_stream.writeStream.foreachBatch(screen)
-     .option("checkpointLocation", ckpt)
-     .trigger(availableNow=True).start().awaitTermination())
+    drain(batch_stream, lambda w: w.foreachBatch(screen)
+          .option("checkpointLocation", ckpt))
     # distinct batch-side: re-delivered docs across micro-batches (the
     # at-least-once ingest case) collapse to one candidate row
     if not os.path.isdir(out):  # no matching source file: no batch wrote
@@ -1069,9 +996,8 @@ def streaming_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
          .agg(F.count(F.lit(1)).cast("long").alias("n"))
          .write.mode("append").parquet(out))
 
-    (stream.writeStream.foreachBatch(stage_histogram)
-     .option("checkpointLocation", ckpt)
-     .trigger(availableNow=True).start().awaitTermination())
+    drain(stream, lambda w: w.foreachBatch(stage_histogram)
+          .option("checkpointLocation", ckpt))
 
     if os.path.isdir(out):
         cur = (spark.read.parquet(out).groupBy("bucket")

@@ -16,16 +16,37 @@ Design notes for scale:
   backed instead of a window over a shuffle.
 - Output to partitioned parquet keeps the warehouse layout identical to
   the batch sink, so downstream consumers cannot tell which wrote it.
+- Every bounded stream runs through ``drain``, which sizes the state
+  shuffle from the source's volume: ``max(4, min(source_bytes // 64 MiB,
+  max(8, 2 x defaultParallelism)))`` partitions. The state store pays a
+  fixed per-partition, per-microbatch commit cost, so a small source at
+  the session's batch width (32) spends most of its drain committing
+  empty partitions. The width is scoped to ``start()``; batch plans keep
+  the session value.
+- Checkpoints pin the width: Spark restores ``spark.sql.shuffle.
+  partitions`` from the offset log of an existing checkpoint, so a
+  checkpoint first started at 32 keeps 32 however its source is sized
+  now. Read the effective count from the returned query's
+  ``lastProgress`` (``stateOperators[*].numShufflePartitions``), never
+  assume it.
+- A drain is bounded by ``DRAIN_TIMEOUT_S``: a stalled stream is stopped
+  and fails with its last progress, instead of blocking its caller.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import StructType
 
 GAP = "30 minutes"
 WATERMARK = "1 hour"
+# the bound on one availableNow drain; above the 100x stress decade's
+# slowest drain, below the test suite's whole budget
+DRAIN_TIMEOUT_S = 1800
 
 
 def read_event_stream(spark: SparkSession, path: str, schema: StructType,
@@ -225,37 +246,94 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def run_to_memory(df: DataFrame, name: str, mode: str = "append") -> None:
+def _source_bytes(df: DataFrame) -> int:
+    """Bytes behind a stream's file sources, read from its analyzed plan:
+    each ``StreamingRelation`` leaf's ``path`` option (narrowed by its
+    ``pathGlobFilter``), sized on the Hadoop FS. A distinct path is
+    counted once, so a self-union does not double its volume; a source
+    without a path (generator, Kafka) contributes nothing."""
+    from cliqz_etl_spark.io import _hadoop_fs, _hadoop_path
+
+    spark = df.sparkSession
+    sources = set()
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "StreamingRelation":
+            continue
+        opts = leaf.dataSource().options()
+        path, glob = opts.get("path"), opts.get("pathGlobFilter")
+        if path.isDefined():
+            sources.add((path.get(), glob.get() if glob.isDefined() else None))
+    total = 0
+    for path, glob in sources:
+        fs = _hadoop_fs(spark, path)
+        for st in fs.globStatus(_hadoop_path(spark, path)) or []:
+            hits = [st]
+            if glob is not None and st.isDirectory():
+                hits = fs.listStatus(
+                    st.getPath(), spark._jvm.org.apache.hadoop.fs.GlobFilter(glob))
+            total += sum(fs.getContentSummary(h.getPath()).getLength()
+                         for h in hits)
+    return total
+
+
+def drain(df: DataFrame,
+          sink: Callable[[DataStreamWriter], DataStreamWriter]
+          ) -> StreamingQuery:
+    """Run a bounded stream to completion: ``sink`` configures
+    ``df.writeStream`` (format, mode, checkpoint, name), the drain adds
+    the availableNow trigger, starts it with the state shuffle sized from
+    the source's bytes (the session width comes back right after
+    ``start()``) and waits at most ``DRAIN_TIMEOUT_S``. A drain that
+    runs out of time is stopped and raises ``TimeoutError`` with its last
+    progress. Returns the terminated query, whose ``lastProgress`` holds
+    the effective partition count — an existing checkpoint keeps the
+    count it was first started with."""
+    from cliqz_etl_spark.tables import scoped_conf
+
+    spark = df.sparkSession
+    # One state partition per ~64 MiB of source, floored at 4 and capped
+    # at 2x parallelism: past the cap extra partitions only add commits,
+    # not concurrency. Floor 8 -> 4 in round 14, interleaved A/B at sf0.1:
+    # left_outer_join 5.33/3.48 -> 2.64/3.79 s, daily_peak 3.09/2.72 ->
+    # 1.78/1.91 s; floor 2 regressed the funnel and was rejected.
+    cap = max(8, 2 * spark.sparkContext.defaultParallelism)
+    n = max(4, min(_source_bytes(df) // (64 << 20), cap))
+    writer = sink(df.writeStream).trigger(availableNow=True)
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", str(n),
+                     default="32"):
+        q = writer.start()
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"stream {q.name or q.id} did not drain within "
+            f"{DRAIN_TIMEOUT_S} s; last progress: {q.lastProgress}")
+    return q
+
+
+def run_to_memory(df: DataFrame, name: str,
+                  mode: str = "append") -> StreamingQuery:
     """Drain all available input into an in-memory table (tests/debug):
     availableNow processes the backlog then stops — the streaming twin of
     one daily batch run."""
-    (
-        df.writeStream.format("memory").queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(df, lambda w: w.format("memory").queryName(name)
+                 .outputMode(mode))
 
 
 def run_to_parquet(df: DataFrame, path: str, checkpoint: str,
-                   partition_by: str | None = None) -> None:
+                   partition_by: str | None = None) -> StreamingQuery:
     """Continuous warehouse sink: append-mode parquet with checkpointed
     exactly-once file commits; layout matches the batch writer."""
-    w = (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.start().awaitTermination()
+    def sink(w: DataStreamWriter) -> DataStreamWriter:
+        w = (w.format("parquet").option("path", path)
+             .option("checkpointLocation", checkpoint).outputMode("append"))
+        return w.partitionBy(partition_by) if partition_by else w
+    return drain(df, sink)
 
 
 def run_to_upsert(df: DataFrame, base_path: str, checkpoint: str,
-                  key: str | list[str]) -> None:
+                  key: str | list[str]) -> StreamingQuery:
     """foreachBatch merge sink: each micro-batch SCD-1-upserts into a
     parquet target (io.upsert_parquet — same-key rows replaced, new keys
     appended). This is the streaming keyed-table pattern the built-in
@@ -289,14 +367,9 @@ def run_to_upsert(df: DataFrame, base_path: str, checkpoint: str,
         else:
             bdf.write.mode("overwrite").parquet(base_path)
 
-    (
-        df.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    return drain(df, lambda w: w.foreachBatch(apply_batch)
+                 .option("checkpointLocation", checkpoint)
+                 .outputMode("update"))
 
 
 ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming.state."

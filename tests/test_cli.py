@@ -117,6 +117,32 @@ def test_run_day_end_to_end_idempotent(spark, day_inputs):
     assert _snapshot(spark, day_inputs["base"]) == first
 
 
+def test_run_day_with_no_testpilottest_client(spark, day_inputs, tmp_path):
+    """A day on which no testpilot client also sends a testpilottest ping
+    writes an empty testpilottest dataset, which leaves no parquet footer
+    to infer a schema from. The rollup must still read it back and roll
+    the day up to zero rows instead of failing."""
+    from cliqz_etl_spark.cli import build_parser, cmd_run_day
+
+    pings = [
+        _ping(UUID1, "testpilot", "20170101",
+              events=[{"event": "enabled", "object": "testpilot@cliqz.com"}]),
+        # the client's only testpilottest ping is from another day
+        _ping(UUID1, "testpilottest", "20170202",
+              test="testpilot@cliqz.com", tpt_event="cliqzEnabled"),
+    ]
+    pings_path = tmp_path / "pings_no_overlap.jsonl"
+    pings_path.write_text("\n".join(json.dumps(p) for p in pings))
+    args = build_parser().parse_args(
+        ["run-day", "--day", "20170101", "--base", day_inputs["base"],
+         "--pings", str(pings_path), "--search-csv", day_inputs["csv"],
+         "--main-summary", day_inputs["ms"], "--aes-key", AES_KEY])
+    written = cmd_run_day(args, spark=spark)["written"]
+    assert written["testpilot"] == 1
+    assert written["testpilottest"] == 0
+    assert written["profile_daily"] == 0
+
+
 def test_run_day_requires_main_summary_or_skip(day_inputs, spark):
     argv = ["run-day", "--day", "20170101", "--base", day_inputs["base"],
             "--pings", day_inputs["pings"],

@@ -254,12 +254,22 @@ def test_streaming_legacy_nanos_layout_and_conf_restore(spark, tmp_path):
     assert spark.conf.get(conf_key, "false") == "false", "conf leaked"
 
 
-def test_drain_restores_shuffle_partitions(spark):
-    """_drain sizes the stateful shuffle for the stream it starts; the
-    session's batch sizing must come back after the drain (and the
-    drained stream itself must have used the stream-scoped width)."""
+def _state_partition_counts(q) -> set[int]:
+    return {so["numShufflePartitions"]
+            for so in q.lastProgress["stateOperators"]}
+
+
+def test_drain_restores_shuffle_partitions(spark, tmp_path):
+    """The drain sizes the stateful shuffle for the stream it starts; the
+    session's batch sizing must come back after the drain, on both the
+    registry path (streamq) and the run_to_* sinks, and the drained
+    stream itself must have used the stream-scoped width: a fresh
+    checkpoint over a small source starts at the 4-partition floor."""
     from cliqz_etl_spark.queries.streamq import streaming_hourly_counts
 
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_events(str(src))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "17")
     try:
@@ -267,8 +277,94 @@ def test_drain_restores_shuffle_partitions(spark):
         assert df.count() > 0
         assert spark.conf.get("spark.sql.shuffle.partitions") == "17", \
             "drain leaked its stream-scoped shuffle sizing into the session"
+        for run in (
+            lambda ev: run_to_memory(ev, "restore_mem", mode="complete"),
+            lambda ev: run_to_parquet(ev, str(tmp_path / "out"),
+                                      str(tmp_path / "ckpt")),
+        ):
+            q = run(windowed_event_counts(
+                read_event_stream(spark, str(src), EVENT_SCHEMA)))
+            assert _state_partition_counts(q) == {4}
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "17"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_checkpoint_keeps_its_first_state_partition_count(spark, tmp_path):
+    """Spark restores the state width from an existing checkpoint's
+    offset log: a checkpoint first started at 32 stays at 32 when the
+    drain restarts it, and still emits exactly the closed windows."""
+    from cliqz_etl_spark.tables import scoped_conf
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    (tmp_path / "src").mkdir()
+
+    def emit(name, stamps):
+        with open(f"{src}/{name}", "w") as f:
+            for i, ts in enumerate(stamps):
+                f.write(json.dumps({"event_id": i, "ts": ts, "user_id": 1,
+                                    "event_type": "click",
+                                    "value": 1.0}) + "\n")
+
+    def counts():
+        ev = read_event_stream(spark, src, EVENT_SCHEMA)
+        return windowed_event_counts(ev, "1 hour")
+
+    emit("a.json", ["2024-01-01T10:00:00", "2024-01-01T10:20:00",
+                    "2024-01-01T12:00:00"])
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", "32",
+                     default="32"):
+        first = (counts().writeStream.format("parquet")
+                 .option("path", out).option("checkpointLocation", ckpt)
+                 .outputMode("append").trigger(availableNow=True).start())
+    assert first.awaitTermination(120)
+    assert _state_partition_counts(first) == {32}
+    # watermark 13:10 after this drain: the 10:00 and 12:00 windows close
+    emit("b.json", ["2024-01-01T13:30:00", "2024-01-01T14:10:00"])
+    q = run_to_parquet(counts(), out, ckpt)
+    assert _state_partition_counts(q) == {32}
+    got = sorted((r["window_start"].isoformat(), r["n_events"])
+                 for r in spark.read.parquet(out).collect())
+    assert got == [("2024-01-01T10:00:00", 2), ("2024-01-01T12:00:00", 1)]
+
+
+def test_drain_timeout_stops_the_query(spark, tmp_path, monkeypatch):
+    """A drain that outlives DRAIN_TIMEOUT_S is stopped and raises with
+    the query's name; no stream is left running behind the error."""
+    import time
+
+    import pytest
+
+    from cliqz_etl_spark.streaming import jobs
+
+    monkeypatch.setattr(jobs, "DRAIN_TIMEOUT_S", 0.01)
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_events(str(src))
+
+    def slow_sink(batch, batch_id):
+        time.sleep(1)
+
+    with pytest.raises(TimeoutError, match="stalled_drain"):
+        jobs.drain(read_event_stream(spark, str(src), EVENT_SCHEMA),
+                   lambda w: w.foreachBatch(slow_sink)
+                   .queryName("stalled_drain")
+                   .option("checkpointLocation", str(tmp_path / "ckpt")))
+    assert spark.streams.active == []
+
+
+def test_every_stream_runs_through_the_one_drain():
+    """Source scan: ``awaitTermination(`` appears in the program and its
+    tools only inside ``jobs.drain``, so an unsized or unbounded drain
+    cannot creep back in. Test files are exempt."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    hits = {str(p.relative_to(root)): p.read_text().count("awaitTermination(")
+            for d in ("cliqz_etl_spark", "tools")
+            for p in sorted((root / d).rglob("*.py"))
+            if "awaitTermination(" in p.read_text()}
+    assert hits == {"cliqz_etl_spark/streaming/jobs.py": 1}, hits
 
 
 def test_local_heap_default_bounds():

@@ -766,81 +766,72 @@ STREAM100 = "/tmp/sfstress_stream100"
 def stream_sweep(spark) -> None:
     """Streaming scale stress: drain the Structured Streaming family with
     availableNow over 1x/10x/100x event volume (100k / 1M / 10M rows) and
-    record, per decade, the drain wall-clock and the state store's peak
-    row count and memory from the query's own progress telemetry. The
-    things this verifies at scale: (a) the volume-derived
-    ``_state_partitions`` sizing keeps per-batch fixed costs from
-    dominating as the source grows, (b) watermarks actually bound state —
-    peak state memory must grow with rate x horizon, NOT with total
-    stream length, so the 100x decade must stay far under 100x the 1x
-    state, (c) drain time stays ~linear."""
+    record, per decade, the drain wall-clock, the state store's peak
+    row count and memory, and the state partitions the drain chose, all
+    from the query's own progress telemetry. The things this verifies at
+    scale: (a) ``jobs.drain``'s volume-derived state-partition sizing
+    keeps per-batch fixed costs from dominating as the source grows, (b)
+    watermarks actually bound state — peak state memory must grow with
+    rate x horizon, NOT with total stream length, so the 100x decade must
+    stay far under 100x the 1x state, (c) drain time stays ~linear."""
     import shutil
     import uuid
 
-    from cliqz_etl_spark.queries.streamq import (_event_stream,
-                                                 _state_partitions)
+    from cliqz_etl_spark.queries.streamq import _event_stream
     from cliqz_etl_spark.streaming.jobs import (click_purchase_join,
-                                                dedup_stream,
+                                                dedup_stream, drain,
+                                                run_to_upsert,
                                                 running_user_totals,
                                                 session_rollup,
                                                 windowed_event_counts)
-    from cliqz_etl_spark.tables import scoped_conf
 
     ckpt_base = f"/tmp/sfstress_stream_ckpt_{uuid.uuid4().hex[:8]}"
 
-    def drain(df, mode: str, n_parts: int, label: str) -> None:
+    def timed_drain(df, mode: str, label: str) -> None:
         t0 = time.perf_counter()
-        with scoped_conf(spark, "spark.sql.shuffle.partitions",
-                         str(n_parts), default="32"):
-            q = (df.writeStream.format("noop")
-                 .option("checkpointLocation",
-                         f"{ckpt_base}/{label.replace(' ', '_')}")
-                 .outputMode(mode).trigger(availableNow=True).start())
-            q.awaitTermination()
+        q = drain(df, lambda w: w.format("noop")
+                  .option("checkpointLocation",
+                          f"{ckpt_base}/{label.replace(' ', '_')}")
+                  .outputMode(mode))
         dt = time.perf_counter() - t0
         rows_max = mem_max = 0
+        parts = set()
         for p in q.recentProgress:
             for so in (p.get("stateOperators") or []):
                 rows_max = max(rows_max, so.get("numRowsTotal") or 0)
                 mem_max = max(mem_max, so.get("memoryUsedBytes") or 0)
+                parts.add(so.get("numShufflePartitions"))
         print(f"{label:42s} {dt:7.2f}s  state_rows<={rows_max:>9}  "
-              f"state_mem<={mem_max / (1 << 20):7.1f}MiB  parts={n_parts}")
+              f"state_mem<={mem_max / (1 << 20):7.1f}MiB  "
+              f"parts={sorted(parts)}")
 
     decades = [("1x", SMALL), ("10x", STREAM10), ("100x", STREAM100)]
     for lbl, path in decades:
         n_ev = _rows(path, "events")
-        n_parts = _state_partitions(spark, path)
-        ev = _event_stream(spark, path)
-        print(f"--- stream decade {lbl}: {n_ev} events, "
-              f"{n_parts} state partitions ---")
-        drain(windowed_event_counts(ev), "update", n_parts,
-              f"windowed_counts {lbl}")
-        drain(dedup_stream(_event_stream(spark, path)), "append", n_parts,
-              f"dedup_stream {lbl}")
+        print(f"--- stream decade {lbl}: {n_ev} events ---")
+        timed_drain(windowed_event_counts(_event_stream(spark, path)),
+                    "update", f"windowed_counts {lbl}")
+        timed_drain(dedup_stream(_event_stream(spark, path)), "append",
+                    f"dedup_stream {lbl}")
         # session_window aggs support append/complete only (not update)
-        drain(session_rollup(_event_stream(spark, path)), "complete", n_parts,
-              f"session_rollup {lbl}")
-        drain(running_user_totals(_event_stream(spark, path)), "update",
-              n_parts, f"running_totals {lbl}")
-        ev2 = _event_stream(spark, path)
-        drain(click_purchase_join(
-            ev2.where("event_type = 'click'"),
+        timed_drain(session_rollup(_event_stream(spark, path)), "complete",
+                    f"session_rollup {lbl}")
+        timed_drain(running_user_totals(_event_stream(spark, path)),
+                    "update", f"running_totals {lbl}")
+        timed_drain(click_purchase_join(
+            _event_stream(spark, path).where("event_type = 'click'"),
             _event_stream(spark, path).where("event_type = 'purchase'")),
-            "append", n_parts, f"stream_join {lbl}")
+            "append", f"stream_join {lbl}")
         # foreachBatch merge sink: per-batch SCD-1 upsert into a parquet
         # table. availableNow over one source file is a single batch here,
         # so this measures one full merge of |users| keys; the known scale
         # cliff (whole-table rewrite PER BATCH on a long-running stream)
         # is documented at the operator — this point tracks the merge
         # cost's growth with key cardinality.
-        from cliqz_etl_spark.streaming.jobs import (run_to_upsert,
-                                                    running_user_totals)
         up_base = f"{ckpt_base}/upsert_{lbl}"
         t0 = time.perf_counter()
-        with scoped_conf(spark, "spark.sql.shuffle.partitions",
-                         str(n_parts), default="32"):
-            run_to_upsert(running_user_totals(_event_stream(spark, path)),
-                          f"{up_base}/table", f"{up_base}/ckpt", "user_id")
+        run_to_upsert(running_user_totals(_event_stream(spark, path)),
+                      f"{up_base}/table", f"{up_base}/ckpt", "user_id")
         n_keys = spark.read.parquet(f"{up_base}/table").count()
         print(f"{'upsert_totals ' + lbl:42s} {time.perf_counter() - t0:7.2f}s  "
               f"keys={n_keys}")
