@@ -11,16 +11,22 @@ scheduler. Here the same chain is one subcommand:
 Steps (each the tested library call, nothing pipeline-specific lives here):
   1. ping ingest: schema'd JSON scan (io.read_json + PING_SCHEMA — no
      inference pass), day-filtered on meta.submissionDate and split by
-     meta.docType into the testpilot / testpilottest sources;
+     meta.docType into the testpilot / testpilottest sources; an
+     --aes-key-file is read on the driver (io.read_text_scalar, no job);
   2. extraction + partitioned write: pipelines.testpilot.run_day — the
      three datasets land under {base}/cliqz_{name}/v1/submission={day}
      with dynamic partition overwrite, so re-running a day rewrites that
-     day only (K1 idempotency);
+     day only (K1 idempotency); decryption is one JVM expression, so no
+     Python worker runs;
   3. rollup (unless --skip-rollup): profile_daily over the datasets READ
      BACK from step 2's parquet (the cross-job handoff the reference's
      scheduler did through the warehouse) joined with --main-summary,
      written to {base}/cliqz_profile_daily/v1 partitioned by
      submission_date.
+
+Every write goes through io.write_parquet, which observes the rows it
+writes; the reported counts come from those writes, so no dataset is
+executed a second time to count it.
 
 Exit code 0 on success; input problems raise loud argparse/ValueError.
 """
@@ -111,7 +117,13 @@ def _require_day(day: str) -> str:
 def cmd_run_day(args: argparse.Namespace,
                 spark: SparkSession | None = None) -> dict:
     """The run-day driver; ``spark`` is injectable so tests reuse their
-    session. Returns {"written": {...row counts...}} for logging."""
+    session. Returns {"written": {dataset: rows}} for logging, every count
+    observed by the dataset's own write job (no frame is re-executed to
+    count it). ``written["profile_daily"]`` is the rows this run's rollup
+    wrote: the rollup reads back every day in the warehouse and dynamic
+    partition overwrite replaces each day it writes, so when every
+    warehouse day still yields rollup rows this equals the warehouse
+    total."""
     from pyspark.sql import functions as F
 
     from cliqz_etl_spark.io import (read_csv, read_json, read_parquet,
@@ -135,7 +147,7 @@ def cmd_run_day(args: argparse.Namespace,
         test_pings=pings.where(F.col("meta.docType") == "testpilottest"),
         search_csv=read_csv(spark, args.search_csv, header=True),
         aes_key=aes_key, day=day, out_base=args.base)
-    written = {name: df.count() for name, df in results.items()}
+    written = {name: n for name, (_, n) in results.items()}
 
     if not args.skip_rollup:
         # the cross-job handoff goes through the parquet just written —
@@ -144,16 +156,14 @@ def cmd_run_day(args: argparse.Namespace,
         # (a day whose testpilot and testpilottest clients do not
         # overlap) leaves no file footer to infer a schema from
         tp = read_parquet(spark, f"{args.base}/cliqz_testpilot/v1",
-                          schema=results["testpilot"].schema)
+                          schema=results["testpilot"][0].schema)
         tpt = read_parquet(spark, f"{args.base}/cliqz_testpilottest/v1",
-                           schema=results["testpilottest"].schema)
+                           schema=results["testpilottest"][0].schema)
         ms = read_parquet(spark, args.main_summary)
         rollup = profile_daily(tp, tpt, ms)
-        write_parquet(rollup, f"{args.base}/cliqz_profile_daily/v1",
-                      partition_by="submission_date")
-        written["profile_daily"] = read_parquet(
-            spark, f"{args.base}/cliqz_profile_daily/v1",
-            schema=rollup.schema).count()
+        written["profile_daily"] = write_parquet(
+            rollup, f"{args.base}/cliqz_profile_daily/v1",
+            partition_by="submission_date")["n_rows"]
 
     for name, n in written.items():
         print(f"run-day {day}: {name} -> {n} rows")
@@ -230,8 +240,8 @@ def cmd_query(args: argparse.Namespace,
     try:
         df = registry[args.name].fn(spark, args.data)
         if args.out:
-            df.write.mode("overwrite").parquet(args.out)
-            n = spark.read.parquet(args.out).count()
+            from cliqz_etl_spark.io import write_parquet
+            n = write_parquet(df, args.out)["n_rows"]
             print(f"query {args.name}: {n} rows -> {args.out}")
         else:
             # Persist so show() + count() share one execution — expensive

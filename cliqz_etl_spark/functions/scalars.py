@@ -9,7 +9,6 @@ Python is involved.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -105,47 +104,36 @@ def hours(col: Column | str, default: float = 0.0) -> Column:
 def decrypt_aes_ecb_b64(col: Column | str, key: Column,
                         zero_pad_fallback: bool = True) -> Column:
     """F1 (testpilot_data.py:98-106): base64 -> AES-ECB decrypt -> strip
-    zero padding -> drop 4-byte head/tail. Bad ciphertext -> NULL.
+    trailing zero bytes -> drop the 4-byte head and tail -> UTF-8. Any bad
+    input (malformed base64, wrong key, invalid UTF-8) -> NULL, the
+    reference's ``decrypt(ct).rstrip("\\0")[4:-4].decode("utf-8")`` with
+    its errors turned into NULL.
 
-    Two-tier plan: the JVM fast path (aes_decrypt ECB/'DEFAULT' = PKCS
-    unpad) handles well-formed PKCS ciphertext inside codegen. The
-    reference's producer, though, was PyCrypto raw ECB over ZERO-padded
-    plaintext (testpilot_data.py:102) — its ciphertext fails PKCS unpad
-    and NULLs out. With ``zero_pad_fallback`` the rows the fast path
-    NULLed are re-tried in an Arrow-batched pandas UDF running a pure-
-    Python AES (functions/aes_py.py, FIPS-197-vector-tested) with the
-    reference's exact ``rstrip("\\0")[4:-4]`` semantics; rows already
-    decoded JVM-side pass through untouched, so the Python work is
-    proportional to the zero-padded minority. Set it False for pure-JVM
-    plans over PKCS-only data."""
-    plain = F.try_aes_decrypt(F.unbase64(_c(col)), key, F.lit("ECB"), F.lit("DEFAULT"))
-    text = F.regexp_replace(plain.cast("string"), "\x00+$", "")
-    fast = F.substring(text, 5, F.greatest(F.length(text) - F.lit(8), F.lit(0)))
-    if not zero_pad_fallback:
-        return fast
+    One JVM expression, two arms. The PKCS arm is ``aes_decrypt`` ECB/
+    'DEFAULT' (PKCS unpad). The reference's producer, though, was
+    PyCrypto raw ECB over ZERO-padded plaintext, which fails the PKCS
+    unpad, and Spark refuses ('ECB', 'NONE'). So when the PKCS arm NULLs,
+    the second arm appends the encryption of one full PKCS pad block
+    (``aes_encrypt(X'', key)``): unpadding then removes exactly that
+    block and leaves the raw zero-padded plaintext. Zeros are stripped on
+    the hex form, not with ``rtrim`` on a string, which would read
+    invalid UTF-8 lead bytes as multi-byte characters; the [4:-4] slice
+    counts bytes, as the reference's did.
 
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _zero_pad_decrypt(cipher: pd.Series, key_s: pd.Series,
-                          fast_s: pd.Series) -> pd.Series:
-        import base64
-
-        from cliqz_etl_spark.functions.aes_py import decrypt_ecb
-
-        out = []
-        for c, k, f in zip(cipher, key_s, fast_s):
-            if f is not None or c is None or k is None:
-                out.append(f)
-                continue
-            try:
-                plain_b = decrypt_ecb(base64.b64decode(c), k.encode("utf-8"))
-                out.append(plain_b.rstrip(b"\0")[4:-4].decode("utf-8"))
-            except Exception:
-                out.append(None)
-        return pd.Series(out, dtype=object)
-
-    return _zero_pad_decrypt(_c(col), key.cast("string"), fast)
+    ``zero_pad_fallback=False`` keeps only the PKCS arm; it exists so a
+    probe can count the rows the second arm serves."""
+    raw = F.try_to_binary(_c(col), F.lit("base64"))
+    ecb, pkcs = F.lit("ECB"), F.lit("DEFAULT")
+    plain = F.try_aes_decrypt(raw, key, ecb, pkcs)
+    if zero_pad_fallback:
+        pad_block = F.aes_encrypt(F.lit(b""), key, ecb, pkcs)
+        plain = F.coalesce(plain, F.when(
+            F.octet_length(raw) > 0,
+            F.try_aes_decrypt(F.concat(raw, pad_block), key, ecb, pkcs)))
+    stripped = F.unhex(F.regexp_replace(F.hex(plain), "(00)+$", ""))
+    inner = F.substring(stripped, 5,
+                        F.greatest(F.octet_length(stripped) - 8, F.lit(0)))
+    return F.try_validate_utf8(inner.cast("string"))
 
 
 def null_safe(col: Column | str, default) -> Column:

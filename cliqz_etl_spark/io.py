@@ -15,7 +15,7 @@ Re-expresses the reference's IO surface (SURVEY.md §2.1/§2.2) Spark-first:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -130,9 +130,21 @@ def read_json(spark: SparkSession, path: str, *,
 
 def read_text_scalar(spark: SparkSession, path: str) -> str:
     """First line of a text file as a driver-side scalar (S3,
-    testpilot_data.py:97). Broadcast it (or embed as a literal) if used in
-    executor-side expressions."""
-    return spark.read.text(path).first()[0]
+    testpilot_data.py:97), read on the driver through the Hadoop
+    FileSystem: any scheme Spark reads (file, hdfs, s3a) works, and no
+    Spark job runs. ``\\n``, ``\\r\\n`` and ``\\r`` all end the line. An
+    empty file or first line raises ValueError. Embed the result as a
+    literal if used in executor-side expressions."""
+    jio = spark._jvm.java.io
+    stream = _hadoop_fs(spark, path).open(_hadoop_path(spark, path))
+    try:
+        line = jio.BufferedReader(
+            jio.InputStreamReader(stream, "UTF-8")).readLine()
+    finally:
+        stream.close()
+    if not line:
+        raise ValueError(f"{path}: first line is empty, expected a value")
+    return line
 
 
 _STAGE_SUFFIXES = (".__staging__", ".__compact__", ".__old__")
@@ -335,8 +347,14 @@ def write_parquet(df: DataFrame, path: str, *,
                   partition_by: str | list[str] | None = None,
                   mode: str = "overwrite",
                   sort_within_partitions: str | list[str] | None = None,
-                  target_files: int | None = None) -> None:
-    """Partitioned idempotent parquet write (K1/K2).
+                  target_files: int | None = None,
+                  metrics: dict[str, Column] | None = None) -> dict:
+    """Partitioned idempotent parquet write (K1/K2) that reports what it
+    wrote. Returns ``{"n_rows": <rows written>, **metrics}``, computed BY
+    the write job itself (df.observe + Observation): at 100 TB the
+    difference between free metrics and a second full scan. ``metrics``
+    adds caller aggregates over the written rows, e.g.
+    ``{"null_keys": F.sum(F.col("k").isNull().cast("long"))}``.
 
     ``target_files`` replaces the reference's ``repartition(1)`` /
     ``repartition(16*5)`` file sizing (testpilot_data.py:82,197-200); when
@@ -353,11 +371,15 @@ def write_parquet(df: DataFrame, path: str, *,
         cols = ([sort_within_partitions] if isinstance(sort_within_partitions, str)
                 else list(sort_within_partitions))
         df = df.sortWithinPartitions(*cols)
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"),
+                    *[c.alias(name) for name, c in (metrics or {}).items()])
     writer = df.write.mode(mode)
     if partition_by:
         cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
         writer = writer.partitionBy(*cols)
     writer.parquet(path)
+    return dict(obs.get)
 
 
 def zorder_write(
@@ -454,31 +476,3 @@ def write_jsonl_shards(df: DataFrame, path: str, *,
         writer = writer.option("compression", compression)
     writer.json(path)
     return {"n_shards": n_shards, "est_total_bytes": total, "rows": rows}
-
-
-def write_parquet_observed(df: DataFrame, path: str, *,
-                           partition_by: list[str] | None = None,
-                           mode: str = "overwrite",
-                           metrics: dict[str, Column] | None = None) -> dict:
-    """Write parquet while OBSERVING data-quality metrics in the same
-    pass (df.observe + pyspark Observation): row count plus any caller
-    aggregates are computed by the write job itself — at 100 TB the
-    difference between free metrics and a second full scan. Returns the
-    observed metrics dict.
-
-    Default metrics: n_rows. Callers add e.g.
-    ``{"null_keys": F.sum(F.col("k").isNull().cast("long"))}`` — any
-    aggregate expressible over the written rows."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    obs = Observation()
-    agg = [F.count(F.lit(1)).alias("n_rows")]
-    for name, col in (metrics or {}).items():
-        agg.append(col.alias(name))
-    observed = df.observe(obs, *agg)
-    writer = observed.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-    return dict(obs.get)

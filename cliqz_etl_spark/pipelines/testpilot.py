@@ -197,23 +197,25 @@ def search_config() -> ExtractConfig:
 
 
 def run_day(pings: DataFrame, test_pings: DataFrame, search_csv: DataFrame,
-            aes_key: str, day: str, out_base: str | None = None
-            ) -> dict[str, DataFrame]:
+            aes_key: str, day: str, out_base: str
+            ) -> dict[str, tuple[DataFrame, int]]:
     """One daily run (the rebuild of `main`, testpilot_data.py:84-202):
-    extract the three datasets, stamp the ``submission`` partition column,
-    optionally write partitioned parquet (idempotent per-day overwrite)."""
+    extract the three datasets, stamp the ``submission`` partition column
+    and write each as partitioned parquet under
+    ``{out_base}/cliqz_{name}/v1`` (idempotent per-day overwrite).
+    Returns ``{name: (frame, rows written)}``; the count comes from the
+    write job itself, so nothing is executed twice."""
     results = {
         "testpilot": testpilot_config().apply(pings),
         "testpilottest": testpilottest_config(F.lit(aes_key)).apply(test_pings),
         "search": search_config().apply(search_csv),
     }
-    results = {
-        name: df.withColumn("submission", F.lit(day)) for name, df in results.items()
-    }
-    if out_base:
-        # file-count intent of the reference (1 / 80 / 1 files, :197-200)
-        # is left to AQE coalescing; partition overwrite replaces only `day`
-        for name, df in results.items():
-            write_parquet(df, f"{out_base}/cliqz_{name}/v1",
+    # file-count intent of the reference (1 / 80 / 1 files, :197-200) is
+    # left to AQE coalescing; partition overwrite replaces only `day`
+    out = {}
+    for name, df in results.items():
+        df = df.withColumn("submission", F.lit(day))
+        m = write_parquet(df, f"{out_base}/cliqz_{name}/v1",
                           partition_by="submission")
-    return results
+        out[name] = (df, m["n_rows"])
+    return out

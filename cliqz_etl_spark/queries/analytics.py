@@ -1031,12 +1031,12 @@ def observed_write_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from cliqz_etl_spark.io import write_parquet_observed
+    from cliqz_etl_spark.io import write_parquet
 
     orders = load_table(spark, sf_dir, "orders")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     out = os.path.join(tempfile.gettempdir(), f"cliqz_obs_{tag}")
-    m = write_parquet_observed(
+    m = write_parquet(
         orders, out,
         metrics={
             "null_prices": F.sum(F.col("o_totalprice").isNull().cast("long")),

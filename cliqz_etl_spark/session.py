@@ -27,7 +27,7 @@ _DEFAULT_CONF = {
     # Reference semantics: bad cell -> NULL, never a thrown cast error
     # (testpilot_data.py:53-63). ANSI mode would turn those into exceptions.
     "spark.sql.ansi.enabled": "false",
-    # Arrow for any pandas_udf / mapInPandas path (multimodal, fallbacks).
+    # Arrow for any pandas_udf / mapInPandas path (multimodal).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Idempotent daily re-runs overwrite only the partitions present in the
     # output (replaces the reference's hand-built /submission={day} paths,

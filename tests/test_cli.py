@@ -143,6 +143,38 @@ def test_run_day_with_no_testpilottest_client(spark, day_inputs, tmp_path):
     assert written["profile_daily"] == 0
 
 
+# Spark jobs one run-day over day_inputs may start (21 measured): the
+# search-CSV header read, the four parquet writes and the rollup's query
+# stages. A dataset re-executed to count it, a read-back count or a job
+# to read the key file would each push past it.
+RUN_DAY_MAX_JOBS = 21
+
+
+def test_run_day_job_count_ceiling(spark, day_inputs):
+    """Every count run-day reports comes from its own writes, so its Spark
+    job count stays under a fixed ceiling."""
+    from cliqz_etl_spark.cli import build_parser, cmd_run_day
+
+    args = build_parser().parse_args(
+        ["run-day", "--day", "20170101", "--base", day_inputs["base"],
+         "--pings", day_inputs["pings"], "--search-csv", day_inputs["csv"],
+         "--main-summary", day_inputs["ms"],
+         "--aes-key-file", day_inputs["key"]])
+    sc = spark.sparkContext
+    group = "test-run-day-job-count"
+    sc.setJobGroup(group, "run-day job count")
+    try:
+        written = cmd_run_day(args, spark=spark)["written"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert written == {"testpilot": 1, "testpilottest": 1, "search": 1,
+                       "profile_daily": 1}
+    assert 0 < jobs <= RUN_DAY_MAX_JOBS, jobs
+
+
 def test_run_day_requires_main_summary_or_skip(day_inputs, spark):
     argv = ["run-day", "--day", "20170101", "--base", day_inputs["base"],
             "--pings", day_inputs["pings"],

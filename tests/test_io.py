@@ -7,7 +7,10 @@ from __future__ import annotations
 import os
 import tempfile
 
-from cliqz_etl_spark.io import read_parquet, write_parquet
+import pytest
+from pyspark.sql import functions as F
+
+from cliqz_etl_spark.io import read_parquet, read_text_scalar, write_parquet
 
 
 def test_partition_overwrite_idempotent_day_rerun(spark):
@@ -15,11 +18,16 @@ def test_partition_overwrite_idempotent_day_rerun(spark):
     day1 = spark.createDataFrame([("c1", "20170101"), ("c2", "20170101")],
                                  ["client_id", "submission"])
     day2 = spark.createDataFrame([("c3", "20170102")], ["client_id", "submission"])
-    write_parquet(day1, base, partition_by="submission")
-    write_parquet(day2, base, partition_by="submission")
+    # every write reports the rows it wrote, observed by the write job
+    assert write_parquet(day1, base, partition_by="submission") == {"n_rows": 2}
+    assert write_parquet(day2, base, partition_by="submission") == {"n_rows": 1}
+    # an empty frame writes (and replaces) nothing, and reports 0
+    assert write_parquet(day2.where(F.lit(False)), base,
+                         partition_by="submission") == {"n_rows": 0}
     # re-run day1 with corrected data: must replace day1, not day2
     day1_fixed = spark.createDataFrame([("c9", "20170101")], ["client_id", "submission"])
-    write_parquet(day1_fixed, base, partition_by="submission")
+    assert write_parquet(day1_fixed, base,
+                         partition_by="submission") == {"n_rows": 1}
     # NB partition-column values come back type-inferred (ints here)
     got = sorted((r["client_id"], str(r["submission"])) for r in read_parquet(spark, base).collect())
     assert got == [("c3", "20170102"), ("c9", "20170101")]
@@ -35,6 +43,18 @@ def test_partition_predicate_prunes(spark):
     # the partition filter must reach the scan (partition pruning)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan or "20170102" in plan
+
+
+def test_read_text_scalar_first_line(spark, tmp_path):
+    """The key file's first line, without its line terminator (CRLF
+    included); an empty file is a loud error naming the file."""
+    crlf = tmp_path / "key_crlf.txt"
+    crlf.write_bytes(b"0123456789abcdef\r\nsecond line\r\n")
+    assert read_text_scalar(spark, str(crlf)) == "0123456789abcdef"
+    empty = tmp_path / "key_empty.txt"
+    empty.write_bytes(b"")
+    with pytest.raises(ValueError, match="key_empty.txt"):
+        read_text_scalar(spark, str(empty))
 
 
 def test_upsert_parquet_scd1(spark):

@@ -4,6 +4,8 @@ the profile_daily rollup's intended semantics (SURVEY.md §2.9)."""
 
 from __future__ import annotations
 
+import base64
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -88,32 +90,95 @@ def test_testpilottest_aes_decrypt_roundtrip(spark):
     assert rows["c2"]["cliqz_client_id"] is None
 
 
+def _ecb_b64(plain: bytes, key: bytes, zero_pad: bool) -> str:
+    """AES-ECB ciphertext, base64: zero padding is the reference producer's
+    form (PyCrypto AES.new(key) raw ECB, testpilot_data.py:98-106), PKCS#7
+    the form Spark's own aes_encrypt writes."""
+    from cryptography.hazmat.primitives import padding
+    from cryptography.hazmat.primitives.ciphers import (Cipher, algorithms,
+                                                        modes)
+    if zero_pad:
+        padded = plain + b"\0" * (-len(plain) % 16)
+    else:
+        padder = padding.PKCS7(128).padder()
+        padded = padder.update(plain) + padder.finalize()
+    enc = Cipher(algorithms.AES(key), modes.ECB()).encryptor()
+    return base64.b64encode(enc.update(padded) + enc.finalize()).decode()
+
+
+def _reference_decrypt(ct: str, key: bytes) -> str | None:
+    """The reference's decrypt chain in Python, errors -> NULL: raw ECB
+    decrypt, ``rstrip("\\0")[4:-4]``, strict UTF-8 decode."""
+    from cryptography.hazmat.primitives.ciphers import (Cipher, algorithms,
+                                                        modes)
+    try:
+        raw = base64.b64decode(ct, validate=True)
+        dec = Cipher(algorithms.AES(key), modes.ECB()).decryptor()
+        plain = dec.update(raw) + dec.finalize()
+        return plain.rstrip(b"\0")[4:-4].decode("utf-8")
+    except ValueError:   # bad base64, partial block, invalid UTF-8
+        return None
+
+
 def test_aes_zero_pad_reference_parity(spark):
     """Byte-parity with the reference producer (testpilot_data.py:98-106):
     PyCrypto AES.new(key) raw-ECB ciphertext over ZERO-padded plaintext —
-    which the JVM PKCS path NULLs — must decrypt via the guarded fallback
-    to exactly decrypt(ct).rstrip('\\0')[4:-4]."""
-    import base64
+    which plain PKCS unpadding rejects — must decrypt to exactly
+    decrypt(ct).rstrip('\\0')[4:-4] with errors as NULL; PKCS ciphertext
+    decodes to the same slice of its unpadded plaintext. The chain is one
+    JVM expression: the extraction's plan holds no Python evaluation."""
+    import random
 
-    from cliqz_etl_spark.functions.aes_py import encrypt_ecb_zero_pad
     from cliqz_etl_spark.functions.scalars import decrypt_aes_ecb_b64
 
     key = AES_KEY.encode()
-    plain_padded = b"ABCDcliqz-42|20170101WXYZ"        # 25 B -> zero-pad to 32
-    plain_exact = b"ABCDcliqz-007|0101WXYZ8901234567"  # 32 B -> no padding
-    cts = [base64.b64encode(encrypt_ecb_zero_pad(p, key)).decode()
-           for p in (plain_padded, plain_exact)]
-    df = spark.createDataFrame([(cts[0],), (cts[1],), (None,), ("garbage",)], ["c"])
-    out = [r["p"] for r in
-           df.select(decrypt_aes_ecb_b64("c", F.lit(AES_KEY)).alias("p")).collect()]
-    assert out[0] == plain_padded.rstrip(b"\0")[4:-4].decode() == "cliqz-42|20170101"
-    assert out[1] == plain_exact[4:-4].decode() == "cliqz-007|0101WXYZ890123"
-    assert out[2] is None and out[3] is None
-    # PKCS-enveloped ciphertext still decodes (JVM fast path, fallback on)
-    good, = _encrypt(spark, ["ABCDpkcs-path|xWXYZ"])
-    row = spark.createDataFrame([(good,)], ["c"]).select(
-        decrypt_aes_ecb_b64("c", F.lit(AES_KEY)).alias("p")).first()
-    assert row["p"] == "pkcs-path|x"
+    plains = {
+        "padded": b"ABCDcliqz-42|20170101WXYZ",           # 25 B -> 32
+        "exact_32": b"ABCDcliqz-007|0101WXYZ8901234567",  # no padding
+        "exact_16": b"ABCDcliqz-1WXYZ!",                  # one full block
+        "multibyte": "ABCDü€😀|éWXYZ".encode(),           # slice counts bytes
+        "multibyte_edge": "ü€😀é".encode(),               # head/tail split chars
+        "random_binary": random.Random(7).randbytes(40),
+        "all_zero": b"\0" * 20,
+        "empty": b"",
+    }
+    cases = []   # (label, ciphertext, expected)
+    for name, plain in plains.items():
+        for zero_pad in (True, False):
+            ct = _ecb_b64(plain, key, zero_pad)
+            try:
+                want = plain.rstrip(b"\0")[4:-4].decode("utf-8")
+            except UnicodeDecodeError:
+                want = None
+            cases.append((f"{name}/{'zero' if zero_pad else 'pkcs'}", ct, want))
+    wrong = _ecb_b64(plains["padded"], b"fedcba9876543210", True)
+    cases += [("wrong_key", wrong, _reference_decrypt(wrong, key)),
+              ("null", None, None), ("malformed", "garbage", None),
+              ("not_base64", "!!!", None),
+              ("empty_string", "", _reference_decrypt("", key))]
+    # the zero-padded form is exactly the reference's chain
+    for label, ct, want in cases:
+        if label.endswith("/zero"):
+            assert want == _reference_decrypt(ct, key), label
+    expected = {label: want for label, _, want in cases}
+    assert expected["padded/zero"] == "cliqz-42|20170101"
+    assert expected["multibyte/zero"] == "ü€😀|é"
+    assert expected["wrong_key"] is None
+    assert expected["random_binary/pkcs"] is None
+
+    df = spark.createDataFrame([(ct,) for _, ct, _ in cases], "c string")
+    got = [r["p"] for r in df.select(
+        decrypt_aes_ecb_b64("c", F.lit(AES_KEY)).alias("p")).collect()]
+    assert dict(zip(expected, got)) == expected
+
+    # run-day stays Python-free: no Python UDF node in the executed plan
+    pings = spark.createDataFrame([
+        _mk_ping("c1", test="testpilot@cliqz.com", session=cases[0][1],
+                 tpt_event="cliqzEnabled")], TEST_PING_SCHEMA)
+    out = tp_mod.testpilottest_config(F.lit(AES_KEY)).apply(pings)
+    assert [r["cliqz_client_id"] for r in out.collect()] == ["cliqz-42"]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_search_csv_try_casts(spark):
