@@ -34,10 +34,12 @@ Exit code 0 on success; input problems raise loud argparse/ValueError.
 from __future__ import annotations
 
 import argparse
+import csv
 import sys
 from collections.abc import Sequence
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -59,7 +61,7 @@ def build_parser() -> argparse.ArgumentParser:
                          "day-filtered on meta.submissionDate and split "
                          "by meta.docType")
     rd.add_argument("--search-csv", required=True,
-                    help="search-event CSV with header")
+                    help="search-event CSV file with header")
     key = rd.add_mutually_exclusive_group(required=True)
     key.add_argument("--aes-key", help="AES key for cliqzSession decryption")
     key.add_argument("--aes-key-file",
@@ -114,6 +116,17 @@ def _require_day(day: str) -> str:
     return day
 
 
+def _csv_header_schema(spark: SparkSession, path: str) -> StructType:
+    """All-string schema named by the CSV's own header line, read on the
+    driver: given a schema, Spark skips header inference (one Spark job)
+    and matches columns by position, which this header order keeps, so
+    reordered or extra columns still line up by name."""
+    from cliqz_etl_spark.io import read_text_scalar
+
+    names = next(csv.reader([read_text_scalar(spark, path)]))
+    return StructType([StructField(n, StringType()) for n in names])
+
+
 def cmd_run_day(args: argparse.Namespace,
                 spark: SparkSession | None = None) -> dict:
     """The run-day driver; ``spark`` is injectable so tests reuse their
@@ -145,7 +158,8 @@ def cmd_run_day(args: argparse.Namespace,
     results = run_day(
         pings=pings.where(F.col("meta.docType") == "testpilot"),
         test_pings=pings.where(F.col("meta.docType") == "testpilottest"),
-        search_csv=read_csv(spark, args.search_csv, header=True),
+        search_csv=read_csv(spark, args.search_csv,
+                            schema=_csv_header_schema(spark, args.search_csv)),
         aes_key=aes_key, day=day, out_base=args.base)
     written = {name: n for name, (_, n) in results.items()}
 

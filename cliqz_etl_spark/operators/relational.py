@@ -1,5 +1,5 @@
 """Reusable relational operator helpers (SURVEY.md §2.5/§2.6) shared by
-pipelines and queries. Each is a thin, named composition of DataFrame ops —
+queries and tools. Each is a thin, named composition of DataFrame ops —
 the value is the documented scale contract, not the line count."""
 
 from __future__ import annotations
@@ -8,34 +8,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def broadcast_semi_join(facts: DataFrame, keys: DataFrame, on: str) -> DataFrame:
-    """J5 rebuild (profile_daily.py:41-44,103-115): the reference collected
-    a client-id list to the driver and pushed it into an external fetch;
-    here the key set stays distributed and broadcasts to the fact scan —
-    no driver round-trip, no fact shuffle."""
-    return facts.join(F.broadcast(keys.select(on).distinct()), on, "left_semi")
-
-
 def per_key_limit(df: DataFrame, key: str | list[str], order_by: list[Column],
                   n: int) -> DataFrame:
     """S5's `limit=1000 rows per client` as a row_number window."""
     keys = [key] if isinstance(key, str) else key
     w = Window.partitionBy(*keys).orderBy(*order_by)
     return df.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= n).drop("__rn")
-
-
-def grouped_mode(df: DataFrame, keys: list[str], value: str,
-                 out: str | None = None) -> DataFrame:
-    """A4: most frequent value per key, ties broken by value ascending
-    (deterministic, unlike Counter.most_common on equal counts)."""
-    out = out or f"mode_{value}"
-    counts = df.groupBy(*keys, value).agg(F.count(F.lit(1)).alias("__cnt"))
-    w = Window.partitionBy(*keys).orderBy(F.desc("__cnt"), F.asc(value))
-    return (
-        counts.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select(*keys, F.col(value).alias(out))
-    )
 
 
 def salted_count(df: DataFrame, key: str, salt_buckets: int = 16,
@@ -112,23 +90,6 @@ def write_bucketed(df: DataFrame, table: str, key: str, n_buckets: int,
     if sort_by:
         writer = writer.sortBy(sort_by)
     writer.saveAsTable(table)
-
-
-def map_counter_agg(df: DataFrame, keys: list[str], map_key: Column,
-                    weight: Column | None = None, out: str = "counts") -> DataFrame:
-    """A3: the reference's mergeable Counter{engine-source: n} aggregate
-    (profile_daily.py:157-169) as grouped sums reassembled into a map
-    column via map_from_entries(collect_list(...)). ``weight`` is the
-    per-row increment (the Counter added search_counts' own `count` field,
-    :159-161); default 1 per row."""
-    inc = F.lit(1) if weight is None else weight
-    counted = df.groupBy(*keys, map_key.alias("__k")).agg(F.sum(inc).alias("__v"))
-    return (
-        counted.groupBy(*keys)
-        .agg(F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct(F.col("__k"), F.col("__v"))))
-        ).alias(out))
-    )
 
 
 def bloom_prefilter_semi_join(

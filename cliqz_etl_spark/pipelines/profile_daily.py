@@ -7,12 +7,14 @@ Where the reference round-tripped through the driver (collect client ids
 :41-42, HBase fetch :103-115, re-parallelize :115) and Python pair-RDDs
 with Counter accumulators (:142-197), this is one Catalyst plan:
 
-    earliest experiment ping per client      (J1+A1, :16-22)
-    -> txp daily rows, 2-key join            (J2,    :24-39)
-    -> main_summary ⋉ clients broadcast semi-join  (J5, :41-44)
-    -> UUID validity + 14-day recency filter (P9/P10, :70-77,118-139)
-    -> per-(client, day) aggregates on both branches (A2-A8, :142-197)
-    -> full outer join + NULL-coalesced final schema (J4/L5, :58,209-242)
+    earliest experiment ping per client: testpilottest ⋉ testpilot,
+        min(date)                                        (J1+A1, :16-22)
+    -> txp daily rows, 2-key join                        (J2,    :24-39)
+    -> main_summary ⨝ broadcast min_dates (unique per client, so the
+       inner join is also the client filter) + UUID validity + 14-day
+       recency filter                     (J5+P9/P10, :41-44,70-77,118-139)
+    -> one per-(client, day) aggregate on each branch   (A2-A8, :142-197)
+    -> full outer join + NULL-coalesced final schema    (J4/L5, :58,209-242)
 
 Intent fixes implemented (each marked `§2.9` below):
 - separate cliqz_enabled / cliqz_disabled counters (dup dict key :189-190);
@@ -23,26 +25,24 @@ Intent fixes implemented (each marked `§2.9` below):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cliqz_etl_spark.functions.scalars import hours, indicator
-from cliqz_etl_spark.operators.relational import (
-    broadcast_semi_join,
-    grouped_mode,
-    map_counter_agg,
-)
 
 UUID_RE = "^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$"
 RECENCY_DAYS = 14
 
 
 def earliest_ping_per_client(testpilot: DataFrame, testpilottest: DataFrame) -> DataFrame:
-    """profile_daily.py:16-22: inner join on client_id, min(date) per client."""
+    """profile_daily.py:16-22: min(date) per client over the testpilottest
+    rows of clients that also sent testpilot pings. The reference's inner
+    join only repeated those rows, which never changes a min, so a
+    semi-join is the same result without the row blow-up."""
     return (
-        testpilot.join(testpilottest, "client_id")
+        testpilottest.join(testpilot.select("client_id"), "client_id", "left_semi")
         .groupBy("client_id")
-        .agg(F.min(testpilottest["date"]).alias("min_date"))
+        .agg(F.min("date").alias("min_date"))
     )
 
 
@@ -66,9 +66,10 @@ def txp_daily(testpilot: DataFrame, testpilottest: DataFrame) -> DataFrame:
 def filter_recent_ms(main_summary: DataFrame, min_dates: DataFrame) -> DataFrame:
     """P9+P10 (:70-77, :118-139): valid-UUID clients only, rows no older
     than 14 days before the client's experiment start; unparseable dates
-    drop (try parse -> NULL -> comparison false)."""
+    drop (try parse -> NULL -> comparison false). ``min_dates`` has one
+    row per client, so the broadcast inner join also keeps only the
+    experiment's clients (J5)."""
     ms = main_summary.where(F.regexp_like("client_id", F.lit(UUID_RE)))
-    ms = broadcast_semi_join(ms, min_dates, "client_id")
     joined = ms.join(F.broadcast(min_dates), "client_id")
     sub_date = F.try_to_timestamp(F.col("submission_date"), F.lit("yyyyMMdd")).cast("date")
     min_date = F.try_to_timestamp(F.col("min_date"), F.lit("yyyyMMdd")).cast("date")
@@ -80,32 +81,45 @@ def filter_recent_ms(main_summary: DataFrame, min_dates: DataFrame) -> DataFrame
 
 
 def aggregate_ms(ms: DataFrame) -> DataFrame:
-    """A2-A8 over main_summary rows (:148-173): search-count Counter map,
-    default-browser mode, session hours, has-addon any."""
-    keys = ["client_id", "submission_date"]
-    sc = (
-        ms.select(*keys, F.explode_outer("search_counts").alias("s"))
-        .where(F.col("s").isNotNull())
-    )
-    search_counts = map_counter_agg(
-        sc, keys, F.concat_ws("-", F.col("s.engine"), F.col("s.source")),
-        weight=F.coalesce(F.col("s.count"), F.lit(0)),
-        out="search_counts",
-    )
-    base = ms.groupBy(*keys).agg(
-        F.round(F.sum(hours("subsession_length")), 4).alias("session_hours"),
-        F.max(F.coalesce(F.col("has_addon"), F.lit(False))).alias("has_addon"),
-        F.first("normalized_channel", ignorenulls=True).alias("channel"),
-        F.first("os", ignorenulls=True).alias("os"),
-        F.first("default_search_engine", ignorenulls=True).alias("default_search_engine"),
-    )
-    mode_default = grouped_mode(
-        ms.where(F.col("is_default_browser").isNotNull()),
-        keys, "is_default_browser", out="is_default_browser",
-    )
+    """A2-A8 over main_summary rows (:148-173) as one aggregate:
+    search-count Counter map, default-browser mode, session hours,
+    has-addon any.
+
+    The mode is ``F.mode(deterministic=True)``: NULLs ignored, ties go to
+    the lowest value (False before True), all-NULL gives NULL. The Counter
+    (:157-169) is the group's non-NULL search_counts entries, folded by
+    key ``engine-source`` (``concat_ws`` skips a NULL part) into a map
+    with sorted keys, each value the sum of its entries' ``count`` (NULL
+    adds 0); a group without entries gives ``{}``. The fold scans the
+    group's entries once per distinct key, which stays small for the tens
+    of engine-source pairs a client-day carries. channel, os and
+    default_search_engine are ``first(ignorenulls)``: one of the group's
+    non-NULL values, which one depending on the order rows reach the
+    aggregate, as the reference's reduceByKey kept whichever raw row came
+    first (:54-55)."""
+    def key(s: Column) -> Column:
+        return F.concat_ws("-", s["engine"], s["source"])
+
+    sc = F.col("__sc")
+    ks = F.array_sort(F.array_distinct(F.transform(sc, key)))
+    counter = F.map_from_arrays(ks, F.transform(ks, lambda k: F.aggregate(
+        F.filter(sc, lambda s: key(s) == k), F.lit(0).cast("long"),
+        lambda acc, s: acc + F.coalesce(s["count"], F.lit(0)))))
     return (
-        base.join(search_counts, keys, "left")
-        .join(mode_default, keys, "left")
+        ms.groupBy("client_id", "submission_date").agg(
+            F.round(F.sum(hours("subsession_length")), 4).alias("session_hours"),
+            F.max(F.coalesce(F.col("has_addon"), F.lit(False))).alias("has_addon"),
+            F.first("normalized_channel", ignorenulls=True).alias("channel"),
+            F.first("os", ignorenulls=True).alias("os"),
+            F.first("default_search_engine", ignorenulls=True)
+            .alias("default_search_engine"),
+            F.mode("is_default_browser", deterministic=True)
+            .alias("is_default_browser"),
+            F.flatten(F.collect_list(F.filter(
+                "search_counts", lambda s: s.isNotNull()))).alias("__sc"),
+        )
+        .withColumn("search_counts", counter)
+        .drop("__sc")
     )
 
 

@@ -292,7 +292,9 @@ def map_valued_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mode_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """count + row_number window; ties broken by value ordering so the
-    result is deterministic (F.mode would tie-break arbitrarily).
+    result is deterministic. ``F.mode(..., deterministic=True)`` breaks
+    ties the same way (as `profile_daily.aggregate_ms` uses it), but this
+    query also returns the winning count, which the window keeps.
     NULL values are excluded from the mode (fuzz-pinned): NULL is not a
     category a mode can name, and on a count tie the engines would even
     sort it to opposite ends (Spark NULLs-first asc, DuckDB NULLs-last)."""

@@ -143,11 +143,13 @@ def test_run_day_with_no_testpilottest_client(spark, day_inputs, tmp_path):
     assert written["profile_daily"] == 0
 
 
-# Spark jobs one run-day over day_inputs may start (21 measured): the
-# search-CSV header read, the four parquet writes and the rollup's query
-# stages. A dataset re-executed to count it, a read-back count or a job
-# to read the key file would each push past it.
-RUN_DAY_MAX_JOBS = 21
+# Spark jobs one run-day over day_inputs may start (11 measured): the
+# three extract writes, the job that reads main_summary's parquet footer
+# for its schema, and the rollup's 7 (6 AQE query stages of its one
+# aggregate per branch, then its write). A dataset re-executed to count
+# it, a read-back count, a job to read the key file or the search-CSV
+# header, or a second aggregate of main_summary would each push past it.
+RUN_DAY_MAX_JOBS = 11
 
 
 def test_run_day_job_count_ceiling(spark, day_inputs):
@@ -173,6 +175,37 @@ def test_run_day_job_count_ceiling(spark, day_inputs):
     assert written == {"testpilot": 1, "testpilottest": 1, "search": 1,
                        "profile_daily": 1}
     assert 0 < jobs <= RUN_DAY_MAX_JOBS, jobs
+
+
+def test_run_day_search_csv_columns_by_header(spark, day_inputs, tmp_path):
+    """The search CSV's columns are matched by its header, not by
+    position: reordered columns and an extra column extract the same
+    search rows as the fixture's CSV."""
+    import csv
+
+    from cliqz_etl_spark.cli import build_parser, cmd_run_day
+
+    with open(day_inputs["csv"], newline="") as f:
+        header, *rows = list(csv.reader(f))
+    order = list(reversed(range(len(header))))
+    reordered = tmp_path / "search_reordered.csv"
+    with open(reordered, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(["extra"] + [header[i] for i in order])
+        w.writerows(["x"] + [r[i] for i in order] for r in rows)
+
+    def search_rows(csv_path, base):
+        args = build_parser().parse_args(
+            ["run-day", "--day", "20170101", "--base", base,
+             "--pings", day_inputs["pings"], "--search-csv", csv_path,
+             "--aes-key", AES_KEY, "--skip-rollup"])
+        cmd_run_day(args, spark=spark)
+        return spark.read.parquet(f"{base}/cliqz_search/v1").collect()
+
+    want = search_rows(day_inputs["csv"], str(tmp_path / "a"))
+    assert [(r["udid"], r["num_backend_results"], r["is_search"])
+            for r in want] == [("u1", 5, True)]
+    assert search_rows(str(reordered), str(tmp_path / "b")) == want
 
 
 def test_run_day_requires_main_summary_or_skip(day_inputs, spark):

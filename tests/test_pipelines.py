@@ -282,3 +282,76 @@ def test_profile_daily_intended_semantics(rollup):
 def test_profile_daily_output_schema(rollup):
     assert len(rollup.columns) == 18
     assert rollup.schema["search_counts"].dataType.simpleString() == "map<string,bigint>"
+
+
+UUID3 = "aaaaaaaa-bbbb-cccc-dddd-eeeeeeeeeeee"
+
+
+def _sc(engine, source, count):
+    return {"engine": engine, "source": source, "count": count}
+
+
+def test_profile_daily_aggregate_edge_cases(spark):
+    """Hand-computed values for the NULL, tie and key edge cases of the
+    main-summary aggregate (search-count Counter and default-browser
+    mode, :148-173)."""
+    tp = spark.createDataFrame(
+        [(UUID3, "20170105", "1.0", True, "enabled")],
+        ["client_id", "submission", "cliqz_version", "has_addon", "event"])
+    tpt = spark.createDataFrame(
+        [(UUID3, "20170105", "20170105", "cz3", "s3", "ss3", "cliqzEnabled")],
+        ["client_id", "submission", "date", "cliqz_client_id", "session_id",
+         "subsession_id", "event"])
+    ms = spark.createDataFrame([
+        # 20170103: mode tie True/False, Counter key and NULL cases
+        (UUID3, "20170103", "release", "Linux", True, 3600, "cliqz",
+         [_sc("google", "urlbar", 2), None, _sc("bing", None, None)], None),
+        (UUID3, "20170103", "release", "Linux", False, 3600, "cliqz",
+         [_sc("google", "urlbar", 3), _sc(None, "urlbar", 4),
+          _sc("amazon", "searchbar", 1)], None),
+        (UUID3, "20170103", "release", "Linux", None, 3600, "cliqz", None, None),
+        # 20170104: every is_default_browser NULL, no Counter entries
+        (UUID3, "20170104", "release", "Linux", None, 3600, "cliqz", None, None),
+        (UUID3, "20170104", "release", "Linux", None, 3600, "cliqz", [], None),
+        (UUID3, "20170104", "release", "Linux", None, 3600, "cliqz", [None], None),
+    ], MS_SCHEMA)
+    out = pd_mod.profile_daily(tp, tpt, ms).withColumn(
+        "keys", F.map_keys("search_counts"))
+    rows = {r["submission_date"]: r for r in out.collect()}
+    assert set(rows) == {"20170103", "20170104", "20170105"}
+
+    r = rows["20170103"]
+    assert r["is_default_browser"] is False   # 1 True vs 1 False: lowest wins
+    # NULL element dropped; concat_ws skips a NULL engine or source; a
+    # NULL count adds 0; google-urlbar summed across the two rows
+    assert r["search_counts"] == {"amazon-searchbar": 1, "bing": 0,
+                                  "google-urlbar": 5, "urlbar": 4}
+    assert r["keys"] == ["amazon-searchbar", "bing", "google-urlbar", "urlbar"]
+
+    r = rows["20170104"]
+    assert r["is_default_browser"] is None    # all NULL -> NULL
+    assert r["search_counts"] == {}           # NULL, [] and [NULL] -> {}
+    assert r["keys"] == []
+
+
+# Final adaptive plan of the rollup fixture (measured): 5 hash exchanges
+# (both sides of the client-start semi-join, the main-summary aggregate,
+# and both sides of the 2-key testpilot join, whose partitioning the txp
+# aggregate and the full outer join reuse) and 2 broadcast exchanges (the
+# testpilot client ids AQE broadcasts into the semi-join, min_dates into
+# main_summary).
+ROLLUP_MAX_HASH_EXCHANGES = 5
+ROLLUP_MAX_BROADCASTS = 2
+
+
+def test_profile_daily_plan_shape(rollup):
+    """Each branch of the rollup is one aggregate: no Window (the
+    window-ranked mode) and no re-joined partial aggregates, so hash
+    exchanges and broadcasts stay under the measured ceilings."""
+    rollup.collect()
+    final = (rollup._jdf.queryExecution().executedPlan().toString()
+             .split("== Initial Plan ==")[0])
+    assert final.count("Exchange hashpartitioning") <= \
+        ROLLUP_MAX_HASH_EXCHANGES, final
+    assert "Window" not in final, final
+    assert final.count("BroadcastExchange") <= ROLLUP_MAX_BROADCASTS, final
