@@ -61,7 +61,8 @@ def build_parser() -> argparse.ArgumentParser:
                          "day-filtered on meta.submissionDate and split "
                          "by meta.docType")
     rd.add_argument("--search-csv", required=True,
-                    help="search-event CSV file with header")
+                    help="search-event CSV with header: a file, a "
+                         "directory of parts or a glob")
     key = rd.add_mutually_exclusive_group(required=True)
     key.add_argument("--aes-key", help="AES key for cliqzSession decryption")
     key.add_argument("--aes-key-file",
@@ -118,12 +119,17 @@ def _require_day(day: str) -> str:
 
 def _csv_header_schema(spark: SparkSession, path: str) -> StructType:
     """All-string schema named by the CSV's own header line, read on the
-    driver: given a schema, Spark skips header inference (one Spark job)
-    and matches columns by position, which this header order keeps, so
-    reordered or extra columns still line up by name."""
+    driver from the first file ``path`` names (a file, a directory of
+    parts or a glob, listed as Spark lists them, without a job; the parts
+    of one CSV share a header): given a schema, Spark skips header
+    inference (one Spark job) and matches columns by position, which this
+    header order keeps, so reordered or extra columns still line up."""
     from cliqz_etl_spark.io import read_text_scalar
 
-    names = next(csv.reader([read_text_scalar(spark, path)]))
+    files = spark.read.text(path).inputFiles()
+    if not files:
+        raise FileNotFoundError(f"{path}: names no data file")
+    names = next(csv.reader([read_text_scalar(spark, min(files))]))
     return StructType([StructField(n, StringType()) for n in names])
 
 

@@ -132,9 +132,11 @@ def read_text_scalar(spark: SparkSession, path: str) -> str:
     """First line of a text file as a driver-side scalar (S3,
     testpilot_data.py:97), read on the driver through the Hadoop
     FileSystem: any scheme Spark reads (file, hdfs, s3a) works, and no
-    Spark job runs. ``\\n``, ``\\r\\n`` and ``\\r`` all end the line. An
-    empty file or first line raises ValueError. Embed the result as a
-    literal if used in executor-side expressions."""
+    Spark job runs. ``\\n``, ``\\r\\n`` and ``\\r`` all end the line, and
+    a leading UTF-8 byte-order mark is dropped, as Hadoop's line reader
+    (``sc.textFile``, Spark's CSV and text scans) drops it. An empty file
+    or first line raises ValueError. Embed the result as a literal if
+    used in executor-side expressions."""
     jio = spark._jvm.java.io
     stream = _hadoop_fs(spark, path).open(_hadoop_path(spark, path))
     try:
@@ -142,6 +144,7 @@ def read_text_scalar(spark: SparkSession, path: str) -> str:
             jio.InputStreamReader(stream, "UTF-8")).readLine()
     finally:
         stream.close()
+    line = (line or "").removeprefix("\ufeff")
     if not line:
         raise ValueError(f"{path}: first line is empty, expected a value")
     return line

@@ -13,7 +13,8 @@ with Counter accumulators (:142-197), this is one Catalyst plan:
     -> main_summary ⨝ broadcast min_dates (unique per client, so the
        inner join is also the client filter) + UUID validity + 14-day
        recency filter                     (J5+P9/P10, :41-44,70-77,118-139)
-    -> one per-(client, day) aggregate on each branch   (A2-A8, :142-197)
+    -> per-(client, day) aggregates: the main-summary Counter summed
+       per key first, then one aggregate per branch     (A2-A8, :142-197)
     -> full outer join + NULL-coalesced final schema    (J4/L5, :58,209-242)
 
 Intent fixes implemented (each marked `§2.9` below):
@@ -25,7 +26,7 @@ Intent fixes implemented (each marked `§2.9` below):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cliqz_etl_spark.functions.scalars import hours, indicator
@@ -81,32 +82,37 @@ def filter_recent_ms(main_summary: DataFrame, min_dates: DataFrame) -> DataFrame
 
 
 def aggregate_ms(ms: DataFrame) -> DataFrame:
-    """A2-A8 over main_summary rows (:148-173) as one aggregate:
-    search-count Counter map, default-browser mode, session hours,
-    has-addon any.
+    """A2-A8 over main_summary rows (:148-173): search-count Counter map,
+    default-browser mode, session hours, has-addon any, with no join.
 
-    The mode is ``F.mode(deterministic=True)``: NULLs ignored, ties go to
-    the lowest value (False before True), all-NULL gives NULL. The Counter
-    (:157-169) is the group's non-NULL search_counts entries, folded by
-    key ``engine-source`` (``concat_ws`` skips a NULL part) into a map
-    with sorted keys, each value the sum of its entries' ``count`` (NULL
-    adds 0); a group without entries gives ``{}``. The fold scans the
-    group's entries once per distinct key, which stays small for the tens
-    of engine-source pairs a client-day carries. channel, os and
+    The Counter (:157-169) is summed per (client, day, key) first: key
+    ``engine-source`` (``concat_ws`` skips a NULL part), NULL entries
+    dropped, a NULL ``count`` adds 0. That aggregate combines map-side,
+    so what it shuffles grows with a client-day's distinct keys, not with
+    its main_summary rows. The per-key sums and the raw rows, unioned,
+    feed one per-(client, day) aggregate: it folds the sums into a map
+    with sorted keys (``{}`` when there are none) and computes the row
+    measures, which the per-key rows leave NULL. The mode is
+    ``F.mode(deterministic=True)``: NULLs ignored, ties go to the lowest
+    value (False before True), all-NULL gives NULL. channel, os and
     default_search_engine are ``first(ignorenulls)``: one of the group's
     non-NULL values, which one depending on the order rows reach the
     aggregate, as the reference's reduceByKey kept whichever raw row came
     first (:54-55)."""
-    def key(s: Column) -> Column:
-        return F.concat_ws("-", s["engine"], s["source"])
-
-    sc = F.col("__sc")
-    ks = F.array_sort(F.array_distinct(F.transform(sc, key)))
-    counter = F.map_from_arrays(ks, F.transform(ks, lambda k: F.aggregate(
-        F.filter(sc, lambda s: key(s) == k), F.lit(0).cast("long"),
-        lambda acc, s: acc + F.coalesce(s["count"], F.lit(0)))))
+    keys = ["client_id", "submission_date"]
+    s = F.col("s")
+    per_key = (
+        ms.select(*keys, F.explode("search_counts").alias("s"))
+        .where(s.isNotNull())
+        .groupBy(*keys, F.concat_ws("-", s["engine"], s["source"]).alias("key"))
+        .agg(F.sum(F.coalesce(s["count"], F.lit(0))).alias("n"))
+    )
+    key = F.col("key")
     return (
-        ms.groupBy("client_id", "submission_date").agg(
+        ms.select(*keys, "subsession_length", "has_addon", "normalized_channel",
+                  "os", "default_search_engine", "is_default_browser")
+        .unionByName(per_key, allowMissingColumns=True)
+        .groupBy(*keys).agg(
             F.round(F.sum(hours("subsession_length")), 4).alias("session_hours"),
             F.max(F.coalesce(F.col("has_addon"), F.lit(False))).alias("has_addon"),
             F.first("normalized_channel", ignorenulls=True).alias("channel"),
@@ -115,11 +121,10 @@ def aggregate_ms(ms: DataFrame) -> DataFrame:
             .alias("default_search_engine"),
             F.mode("is_default_browser", deterministic=True)
             .alias("is_default_browser"),
-            F.flatten(F.collect_list(F.filter(
-                "search_counts", lambda s: s.isNotNull()))).alias("__sc"),
+            F.map_from_entries(F.array_sort(F.collect_list(
+                F.when(key.isNotNull(), F.struct(key, "n")))))
+            .alias("search_counts"),
         )
-        .withColumn("search_counts", counter)
-        .drop("__sc")
     )
 
 

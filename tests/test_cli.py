@@ -143,13 +143,14 @@ def test_run_day_with_no_testpilottest_client(spark, day_inputs, tmp_path):
     assert written["profile_daily"] == 0
 
 
-# Spark jobs one run-day over day_inputs may start (11 measured): the
+# Spark jobs one run-day over day_inputs may start (12 measured): the
 # three extract writes, the job that reads main_summary's parquet footer
-# for its schema, and the rollup's 7 (6 AQE query stages of its one
-# aggregate per branch, then its write). A dataset re-executed to count
-# it, a read-back count, a job to read the key file or the search-CSV
-# header, or a second aggregate of main_summary would each push past it.
-RUN_DAY_MAX_JOBS = 11
+# for its schema, and the rollup's 8 (7 AQE query stages, the Counter's
+# per-key sums among them, then its write). A dataset re-executed to
+# count it, a read-back count, a job to read the key file or the
+# search-CSV header, or another aggregate of main_summary would each push
+# past it.
+RUN_DAY_MAX_JOBS = 12
 
 
 def test_run_day_job_count_ceiling(spark, day_inputs):
@@ -206,6 +207,21 @@ def test_run_day_search_csv_columns_by_header(spark, day_inputs, tmp_path):
     assert [(r["udid"], r["num_backend_results"], r["is_search"])
             for r in want] == [("u1", 5, True)]
     assert search_rows(str(reordered), str(tmp_path / "b")) == want
+
+    # a UTF-8 byte-order mark does not end up in the first column's name
+    bom = tmp_path / "search_bom.csv"
+    bom.write_bytes(b"\xef\xbb\xbf" + reordered.read_bytes())
+    assert search_rows(str(bom), str(tmp_path / "c")) == want
+    # a directory of CSV parts takes its header from its first part
+    parts = tmp_path / "search_parts"
+    parts.mkdir()
+    (parts / "part-0.csv").write_bytes(reordered.read_bytes())
+    (parts / "_SUCCESS").write_bytes(b"")
+    assert search_rows(str(parts), str(tmp_path / "d")) == want
+    assert search_rows(str(parts / "part-*.csv"), str(tmp_path / "e")) == want
+    (parts / "part-0.csv").unlink()
+    with pytest.raises(FileNotFoundError, match="search_parts"):
+        search_rows(str(parts), str(tmp_path / "f"))
 
 
 def test_run_day_requires_main_summary_or_skip(day_inputs, spark):

@@ -55,6 +55,9 @@ def test_read_text_scalar_first_line(spark, tmp_path):
     empty.write_bytes(b"")
     with pytest.raises(ValueError, match="key_empty.txt"):
         read_text_scalar(spark, str(empty))
+    bom = tmp_path / "key_bom.txt"
+    bom.write_bytes(b"\xef\xbb\xbfudid,start_time\n")
+    assert read_text_scalar(spark, str(bom)) == "udid,start_time"
 
 
 def test_upsert_parquet_scd1(spark):

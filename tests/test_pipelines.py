@@ -334,20 +334,56 @@ def test_profile_daily_aggregate_edge_cases(spark):
     assert r["keys"] == []
 
 
-# Final adaptive plan of the rollup fixture (measured): 5 hash exchanges
-# (both sides of the client-start semi-join, the main-summary aggregate,
-# and both sides of the 2-key testpilot join, whose partitioning the txp
-# aggregate and the full outer join reuse) and 2 broadcast exchanges (the
-# testpilot client ids AQE broadcasts into the semi-join, min_dates into
-# main_summary).
-ROLLUP_MAX_HASH_EXCHANGES = 5
-ROLLUP_MAX_BROADCASTS = 2
+def _shuffle_write_bytes(spark, df, group: str) -> int:
+    """Bytes every completed stage of ``df``'s noop write shuffled."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    store, tracker = sc._jsc.sc().statusStore(), sc.statusTracker()
+    stages = [store.lastStageAttempt(s)
+              for j in tracker.getJobIdsForGroup(group)
+              for s in tracker.getJobInfo(j).stageIds]
+    return sum(st.shuffleWriteBytes() for st in stages
+               if st.status().toString() == "COMPLETE")
+
+
+def test_profile_daily_counter_combines_before_shuffle(spark):
+    """The Counter is summed per key before the shuffle, so what the
+    main-summary aggregate shuffles grows with a client-day's distinct
+    keys, not with its rows: 800 rows of one client-day and two keys
+    over 4 input partitions shuffle about what 8 such rows do."""
+    def shuffled(n_rows: int) -> int:
+        row = (UUID3, "20170103", "release", "Linux", True, 60, "cliqz",
+               [_sc("google", "urlbar", 1), _sc("bing", "urlbar", 2)], True)
+        ms = spark.createDataFrame(
+            spark.sparkContext.parallelize([row] * n_rows, 4), MS_SCHEMA)
+        return _shuffle_write_bytes(spark, pd_mod.aggregate_ms(ms),
+                                    f"counter-combine-{n_rows}")
+
+    small, large = shuffled(8), shuffled(800)
+    assert 0 < large < 2 * small, (small, large)
+
+
+# Final adaptive plan of the rollup fixture (measured): 6 hash exchanges
+# (both sides of the client-start semi-join, the Counter's per-key sums,
+# the main-summary aggregate, and both sides of the 2-key testpilot join,
+# whose partitioning the txp aggregate and the full outer join reuse) and
+# 3 broadcast exchanges (the testpilot client ids AQE broadcasts into the
+# semi-join, min_dates into main_summary, and that broadcast reused for
+# the Counter's scan of main_summary).
+ROLLUP_MAX_HASH_EXCHANGES = 6
+ROLLUP_MAX_BROADCASTS = 3
 
 
 def test_profile_daily_plan_shape(rollup):
-    """Each branch of the rollup is one aggregate: no Window (the
-    window-ranked mode) and no re-joined partial aggregates, so hash
-    exchanges and broadcasts stay under the measured ceilings."""
+    """No Window (the window-ranked mode) and no partial aggregates joined
+    back, so hash exchanges and broadcasts stay under the measured
+    ceilings."""
     rollup.collect()
     final = (rollup._jdf.queryExecution().executedPlan().toString()
              .split("== Initial Plan ==")[0])
