@@ -95,10 +95,10 @@ def aggregate_ms(ms: DataFrame) -> DataFrame:
     measures, which the per-key rows leave NULL. The mode is
     ``F.mode(deterministic=True)``: NULLs ignored, ties go to the lowest
     value (False before True), all-NULL gives NULL. channel, os and
-    default_search_engine are ``first(ignorenulls)``: one of the group's
-    non-NULL values, which one depending on the order rows reach the
-    aggregate, as the reference's reduceByKey kept whichever raw row came
-    first (:54-55)."""
+    default_search_engine are the group's lowest non-NULL value (NULL
+    only when all are NULL). The reference's reduceByKey kept whichever
+    raw row came first (:54-55), which depends on partitioning; the
+    lowest value is the same whatever order rows reach the aggregate."""
     keys = ["client_id", "submission_date"]
     s = F.col("s")
     per_key = (
@@ -115,10 +115,9 @@ def aggregate_ms(ms: DataFrame) -> DataFrame:
         .groupBy(*keys).agg(
             F.round(F.sum(hours("subsession_length")), 4).alias("session_hours"),
             F.max(F.coalesce(F.col("has_addon"), F.lit(False))).alias("has_addon"),
-            F.first("normalized_channel", ignorenulls=True).alias("channel"),
-            F.first("os", ignorenulls=True).alias("os"),
-            F.first("default_search_engine", ignorenulls=True)
-            .alias("default_search_engine"),
+            F.min("normalized_channel").alias("channel"),
+            F.min("os").alias("os"),
+            F.min("default_search_engine").alias("default_search_engine"),
             F.mode("is_default_browser", deterministic=True)
             .alias("is_default_browser"),
             F.map_from_entries(F.array_sort(F.collect_list(
@@ -134,13 +133,15 @@ def aggregate_txp(txp: DataFrame) -> DataFrame:
     (tp_event 'enabled'/'disabled' — the dict's duplicated 'cliqz_enabled'
     key was meant to be 'cliqz_disabled'), ``test_*`` counts the
     testpilottest 'cliqzEnabled'/'cliqzDisabled'/'cliqzInstalled'/
-    'cliqzUninstalled' events."""
+    'cliqzUninstalled' events. cliqz_version and cliqz_client_id are the
+    client-day's lowest non-NULL value, so they do not depend on row
+    order."""
     tp_ev, tpt_ev = F.col("tp_event"), F.col("tpt_event")
     return txp.groupBy(
         "client_id", F.col("submission").alias("submission_date")
     ).agg(
-        F.first("cliqz_version", ignorenulls=True).alias("cliqz_version"),
-        F.first("cliqz_client_id", ignorenulls=True).alias("cliqz_client_id"),
+        F.min("cliqz_version").alias("cliqz_version"),
+        F.min("cliqz_client_id").alias("cliqz_client_id"),
         F.sum(indicator(tp_ev == "enabled")).alias("cliqz_enabled"),
         F.sum(indicator(tp_ev == "disabled")).alias("cliqz_disabled"),
         F.sum(indicator(tpt_ev == "cliqzEnabled")).alias("test_enabled"),

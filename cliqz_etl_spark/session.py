@@ -69,9 +69,10 @@ def warm_python_workers(spark: SparkSession, cpus: int) -> None:
     import storm (measured 72 s cold at local[32] — contaminating even a
     best-of-2 min). One no-op pandas_udf job at full parallelism, with at
     least one row per partition so every worker actually forks (64 rows
-    across >64 partitions would leave the surplus workers cold). Shared
-    by bench.py, tools/profile_bench.py and tools/adjudicate.py so the
-    three harnesses cannot drift."""
+    across >64 partitions would leave the surplus workers cold). Called
+    by bench.py, the one query-timing loop, and by the benchmark's own
+    runner in etlbench/; a source-scan test in tests/test_tools.py keeps
+    other copies of the loop out of the program and its tools."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")

@@ -334,6 +334,35 @@ def test_profile_daily_aggregate_edge_cases(spark):
     assert r["keys"] == []
 
 
+def test_profile_daily_is_a_function_of_its_input(spark):
+    """One client-day with two values in each of cliqz_version,
+    cliqz_client_id, channel, os and default_search_engine: the rollup
+    keeps the lowest non-NULL value, so the same rows fed in either
+    order give the same row."""
+    tp = [(UUID3, "20170105", v, True, "enabled") for v in ("1.0", "2.0")]
+    tpt = [(UUID3, "20170105", "20170105", cz, "s3", "ss3", "cliqzEnabled")
+           for cz in ("czA", "czB")]
+    ms = [(UUID3, "20170105", "release", "Linux", True, 3600, "cliqz", None, None),
+          (UUID3, "20170105", "beta", "Darwin", True, 3600, "google", None, None)]
+
+    def rollup(order) -> list:
+        def frame(rows, schema):
+            return spark.createDataFrame(order(rows), schema).coalesce(1)
+        return pd_mod.profile_daily(
+            frame(tp, ["client_id", "submission", "cliqz_version",
+                       "has_addon", "event"]),
+            frame(tpt, ["client_id", "submission", "date", "cliqz_client_id",
+                        "session_id", "subsession_id", "event"]),
+            frame(ms, MS_SCHEMA)).collect()
+
+    forward, backward = rollup(list), rollup(lambda rows: rows[::-1])
+    assert forward == backward
+    (r,) = forward
+    assert (r["cliqz_version"], r["cliqz_client_id"], r["channel"], r["os"],
+            r["default_search_engine"]) == ("1.0", "czA", "beta", "Darwin",
+                                            "cliqz")
+
+
 def _shuffle_write_bytes(spark, df, group: str) -> int:
     """Bytes every completed stage of ``df``'s noop write shuffled."""
     sc = spark.sparkContext

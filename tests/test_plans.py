@@ -105,15 +105,6 @@ def test_kmv_sketch_build_is_bounded(spark, name):
                 f"sort):\n{line}\n{sub[:500]}")
 
 
-def test_no_accidental_cartesian(spark):
-    """Cartesian products only where the algorithm is genuinely all-pairs
-    against a broadcast side (ANN brute force, IVF centroid assignment)."""
-    allowed = {"ann_topk", "ann_ivf", "embedding_near_pairs", "ivf_clusters"}
-    for name in sorted(set(_REGISTRY) - allowed - _DRIVER_LOOP):
-        plan = _plan(spark, name)
-        assert "CartesianProduct" not in plan, name
-
-
 def test_partial_aggregation_before_shuffle(spark):
     """Grouped aggregates must run map-side partial aggregation (the
     reference chose reduceByKey over groupByKey for exactly this)."""

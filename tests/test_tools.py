@@ -1,5 +1,6 @@
-"""Keep the repo tooling honest: the calibration-normalized bench gate
-must keep parsing BASELINE.md and the recorded bench artifacts."""
+"""Keep the repo tooling honest: bench.py stays the one query-timing
+loop, and the calibration-normalized bench gate must keep parsing
+BASELINE.md and the recorded bench artifacts."""
 
 from __future__ import annotations
 
@@ -15,6 +16,61 @@ def _load_bench_compare():
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
+
+
+def _load_bench():
+    spec = importlib.util.spec_from_file_location(
+        "bench", str(_REPO / "bench.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_time_queries_reports_build_inside_total(spark):
+    """bench.py's one timing loop: per query, the best sample's wall
+    clock and the part of it spent until ``q.fn`` returned."""
+    from cliqz_etl_spark.queries import load_all
+    from tests.conftest import SF_SMOKE
+
+    queries, build_s = _load_bench().time_queries(
+        spark, load_all(), ["pricing_summary"], SF_SMOKE)
+    assert set(queries) == set(build_s) == {"pricing_summary"}
+    assert 0 < build_s["pricing_summary"] <= queries["pricing_summary"]
+
+
+def test_bench_rejects_unknown_names_before_a_session(monkeypatch):
+    """A typo in ``python bench.py q1 q2`` fails before any session,
+    warm-up or calibration cost is paid, and names the bad query."""
+    import pytest
+
+    import cliqz_etl_spark.session as session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a session started before the names were checked")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    with pytest.raises(SystemExit, match="no_such_query"):
+        _load_bench().main(["pricing_summary", "no_such_query"])
+
+
+def test_one_query_timing_loop():
+    """Source scan: the Python-worker warm-up is called and the
+    calibration probe is written only in bench.py, so a second copy of
+    the timing loop cannot creep back. The benchmark and the tests are
+    exempt."""
+    files = [*_REPO.glob("*.py"), *(_REPO / "tools").rglob("*.py"),
+             *(_REPO / "cliqz_etl_spark").rglob("*.py")]
+
+    def hits(needle: str) -> dict[str, int]:
+        return {str(p.relative_to(_REPO)): p.read_text().count(needle)
+                for p in sorted(files) if needle in p.read_text()}
+
+    defined = hits("def warm_python_workers(")
+    called = {f: n - defined.get(f, 0)
+              for f, n in hits("warm_python_workers(").items()}
+    assert defined == {"cliqz_etl_spark/session.py": 1}, defined
+    assert {f: n for f, n in called.items() if n} == {"bench.py": 1}, called
+    assert hits('"spark_job_sec":') == {"bench.py": 1}
 
 
 def test_baseline_table_parses_and_is_stamped():

@@ -22,8 +22,10 @@ stay as-is. Two deliberate content choices:
 
 Everything is derived with DuckDB from the sf0.1 parquet files — no
 randomness, same output bit-for-bit on every run. This data is for
-SCALING measurements only (tools/bench_scaling.py); oracle correctness
-stays pinned to the driver's sf directories.
+SCALING measurements only; oracle correctness stays pinned to the
+driver's sf directories. Time a query set on it at a given core count:
+
+    SPARK_GRAFT_SF_DIR=/tmp/sf1 SPARK_GRAFT_CPUS=8 python bench.py q1 ...
 """
 from __future__ import annotations
 
