@@ -24,6 +24,16 @@ Steps (each the tested library call, nothing pipeline-specific lives here):
      written to {base}/cliqz_profile_daily/v1 partitioned by
      submission_date.
 
+Steps 2 and 3 are a small dependency graph on one thread pool: the three
+extract writes and the --main-summary read (a footer-schema job) run
+concurrently; the read-back and the rollup wait only for the testpilot
+and testpilottest writes and the main-summary read, so the search write
+overlaps the rollup. Spark runs jobs submitted from separate threads
+side by side; every task carries the caller's job group, description and
+tags (pyspark.inheritable_thread_target). run-day returns or raises only
+after every task has finished, and a failed testpilot or testpilottest
+write raises before any read-back or rollup.
+
 Every write goes through io.write_parquet, which observes the rows it
 writes; the reported counts come from those writes, so no dataset is
 executed a second time to count it.
@@ -143,6 +153,9 @@ def cmd_run_day(args: argparse.Namespace,
     partition overwrite replaces each day it writes, so when every
     warehouse day still yields rollup rows this equals the warehouse
     total."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
     from pyspark.sql import functions as F
 
     from cliqz_etl_spark.io import (read_csv, read_json, read_parquet,
@@ -161,29 +174,46 @@ def cmd_run_day(args: argparse.Namespace,
 
     pings = read_json(spark, args.pings, schema=PING_SCHEMA).where(
         F.col("meta.submissionDate") == day)
-    results = run_day(
-        pings=pings.where(F.col("meta.docType") == "testpilot"),
-        test_pings=pings.where(F.col("meta.docType") == "testpilottest"),
-        search_csv=read_csv(spark, args.search_csv,
-                            schema=_csv_header_schema(spark, args.search_csv)),
-        aes_key=aes_key, day=day, out_base=args.base)
-    written = {name: n for name, (_, n) in results.items()}
+    search_csv = read_csv(spark, args.search_csv,
+                          schema=_csv_header_schema(spark, args.search_csv))
+    # one thread per concurrent task: the three extract writes and the
+    # main-summary read. Leaving the block waits for every task, so no
+    # run-day job outlives this call, whether it returns or raises.
+    with ThreadPoolExecutor(max_workers=4,
+                            thread_name_prefix="run-day") as pool:
+        def submit(fn, *fn_args):
+            # wrapped per task: each thread gets its own copy of the
+            # caller's local properties (job group, description, and the
+            # SQL execution id each query sets) and the session's tags
+            return pool.submit(inheritable_thread_target(spark)(fn),
+                               *fn_args)
 
+        results = run_day(
+            pings=pings.where(F.col("meta.docType") == "testpilot"),
+            test_pings=pings.where(F.col("meta.docType") == "testpilottest"),
+            search_csv=search_csv, aes_key=aes_key, day=day,
+            out_base=args.base, submit=submit)
+        if not args.skip_rollup:
+            ms = submit(read_parquet, spark, args.main_summary)
+            # the cross-job handoff goes through the parquet just written —
+            # the rollup sees exactly what any downstream consumer would.
+            # Read back with the written frames' schemas: an empty dataset
+            # (a day whose testpilot and testpilottest clients do not
+            # overlap) leaves no file footer to infer a schema from
+            tp_df, tpt_df = (results[name].result()[0]
+                             for name in ("testpilot", "testpilottest"))
+            tp = read_parquet(spark, f"{args.base}/cliqz_testpilot/v1",
+                              schema=tp_df.schema)
+            tpt = read_parquet(spark, f"{args.base}/cliqz_testpilottest/v1",
+                               schema=tpt_df.schema)
+            rollup = profile_daily(tp, tpt, ms.result())
+            rollup_rows = write_parquet(
+                rollup, f"{args.base}/cliqz_profile_daily/v1",
+                partition_by="submission_date")["n_rows"]
+        # the search write overlapped the rollup; collect it last
+        written = {name: f.result()[1] for name, f in results.items()}
     if not args.skip_rollup:
-        # the cross-job handoff goes through the parquet just written —
-        # the rollup sees exactly what any downstream consumer would.
-        # Read back with the written frames' schemas: an empty dataset
-        # (a day whose testpilot and testpilottest clients do not
-        # overlap) leaves no file footer to infer a schema from
-        tp = read_parquet(spark, f"{args.base}/cliqz_testpilot/v1",
-                          schema=results["testpilot"][0].schema)
-        tpt = read_parquet(spark, f"{args.base}/cliqz_testpilottest/v1",
-                           schema=results["testpilottest"][0].schema)
-        ms = read_parquet(spark, args.main_summary)
-        rollup = profile_daily(tp, tpt, ms)
-        written["profile_daily"] = write_parquet(
-            rollup, f"{args.base}/cliqz_profile_daily/v1",
-            partition_by="submission_date")["n_rows"]
+        written["profile_daily"] = rollup_rows
 
     for name, n in written.items():
         print(f"run-day {day}: {name} -> {n} rows")

@@ -22,6 +22,9 @@ also fixes §2.9's missing-column defect (profile_daily's SQL expects
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import Future
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -197,25 +200,32 @@ def search_config() -> ExtractConfig:
 
 
 def run_day(pings: DataFrame, test_pings: DataFrame, search_csv: DataFrame,
-            aes_key: str, day: str, out_base: str
-            ) -> dict[str, tuple[DataFrame, int]]:
+            aes_key: str, day: str, out_base: str,
+            submit: Callable[..., Future]
+            ) -> dict[str, Future[tuple[DataFrame, int]]]:
     """One daily run (the rebuild of `main`, testpilot_data.py:84-202):
     extract the three datasets, stamp the ``submission`` partition column
     and write each as partitioned parquet under
     ``{out_base}/cliqz_{name}/v1`` (idempotent per-day overwrite).
-    Returns ``{name: (frame, rows written)}``; the count comes from the
-    write job itself, so nothing is executed twice."""
-    results = {
-        "testpilot": testpilot_config().apply(pings),
-        "testpilottest": testpilottest_config(F.lit(aes_key)).apply(test_pings),
-        "search": search_config().apply(search_csv),
-    }
-    # file-count intent of the reference (1 / 80 / 1 files, :197-200) is
-    # left to AQE coalescing; partition overwrite replaces only `day`
-    out = {}
-    for name, df in results.items():
-        df = df.withColumn("submission", F.lit(day))
+
+    The three datasets share no frame, so each is built and written by
+    its own task, handed to ``submit(fn, *args)`` (the caller's pool; its
+    threads must carry the caller's Spark local properties), and the
+    three writes run concurrently. Returns ``{name: Future[(frame, rows
+    written)]}`` at once; the count comes from the write job itself, so
+    nothing is executed twice."""
+    def build_and_write(name: str, config: Callable[[], ExtractConfig],
+                        src: DataFrame) -> tuple[DataFrame, int]:
+        df = config().apply(src).withColumn("submission", F.lit(day))
+        # file-count intent of the reference (1 / 80 / 1 files, :197-200)
+        # is left to AQE coalescing; partition overwrite replaces only `day`
         m = write_parquet(df, f"{out_base}/cliqz_{name}/v1",
                           partition_by="submission")
-        out[name] = (df, m["n_rows"])
-    return out
+        return df, m["n_rows"]
+
+    return {name: submit(build_and_write, name, config, src)
+            for name, config, src in (
+                ("testpilot", testpilot_config, pings),
+                ("testpilottest",
+                 lambda: testpilottest_config(F.lit(aes_key)), test_pings),
+                ("search", search_config, search_csv))}

@@ -143,31 +143,38 @@ def test_run_day_with_no_testpilottest_client(spark, day_inputs, tmp_path):
     assert written["profile_daily"] == 0
 
 
-# Spark jobs one run-day over day_inputs may start (12 measured): the
-# three extract writes, the job that reads main_summary's parquet footer
-# for its schema, and the rollup's 8 (7 AQE query stages, the Counter's
+def _run_day_args(day_inputs, base=None):
+    from cliqz_etl_spark.cli import build_parser
+
+    return build_parser().parse_args(
+        ["run-day", "--day", "20170101",
+         "--base", base or day_inputs["base"],
+         "--pings", day_inputs["pings"], "--search-csv", day_inputs["csv"],
+         "--main-summary", day_inputs["ms"],
+         "--aes-key-file", day_inputs["key"]])
+
+
+# Spark jobs one run-day over day_inputs starts (12 measured): the three
+# extract writes, the job that reads main_summary's parquet footer for
+# its schema, and the rollup's 8 (7 AQE query stages, the Counter's
 # per-key sums among them, then its write). A dataset re-executed to
 # count it, a read-back count, a job to read the key file or the
 # search-CSV header, or another aggregate of main_summary would each push
-# past it.
-RUN_DAY_MAX_JOBS = 12
+# past it; a worker thread that drops the caller's job group falls short.
+RUN_DAY_JOBS = 12
 
 
 def test_run_day_job_count_ceiling(spark, day_inputs):
     """Every count run-day reports comes from its own writes, so its Spark
-    job count stays under a fixed ceiling."""
-    from cliqz_etl_spark.cli import build_parser, cmd_run_day
+    job count is fixed, and every job, whichever thread submits it, runs
+    in the caller's job group."""
+    from cliqz_etl_spark.cli import cmd_run_day
 
-    args = build_parser().parse_args(
-        ["run-day", "--day", "20170101", "--base", day_inputs["base"],
-         "--pings", day_inputs["pings"], "--search-csv", day_inputs["csv"],
-         "--main-summary", day_inputs["ms"],
-         "--aes-key-file", day_inputs["key"]])
     sc = spark.sparkContext
     group = "test-run-day-job-count"
     sc.setJobGroup(group, "run-day job count")
     try:
-        written = cmd_run_day(args, spark=spark)["written"]
+        written = cmd_run_day(_run_day_args(day_inputs), spark=spark)["written"]
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -175,7 +182,119 @@ def test_run_day_job_count_ceiling(spark, day_inputs):
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert written == {"testpilot": 1, "testpilottest": 1, "search": 1,
                        "profile_daily": 1}
-    assert 0 < jobs <= RUN_DAY_MAX_JOBS, jobs
+    assert jobs == RUN_DAY_JOBS, jobs
+
+
+def _dataset(path):
+    return path.rstrip("/").split("/")[-2].removeprefix("cliqz_")
+
+
+def test_run_day_extract_writes_run_together(spark, day_inputs, monkeypatch):
+    """The three extract writes are in flight at once: each waits for the
+    other two before it writes, which a sequential run-day cannot pass."""
+    import threading
+
+    import cliqz_etl_spark.pipelines.testpilot as testpilot
+    from cliqz_etl_spark.cli import cmd_run_day
+
+    real = testpilot.write_parquet
+    barrier = threading.Barrier(3, timeout=30)
+
+    def write_together(df, path, **kw):
+        barrier.wait()
+        return real(df, path, **kw)
+
+    monkeypatch.setattr(testpilot, "write_parquet", write_together)
+    written = cmd_run_day(_run_day_args(day_inputs), spark=spark)["written"]
+    assert written == {"testpilot": 1, "testpilottest": 1, "search": 1,
+                       "profile_daily": 1}
+
+
+def test_run_day_search_write_overlaps_rollup(spark, day_inputs, monkeypatch):
+    """The rollup waits only for the testpilot and testpilottest writes:
+    the search write does not start until the rollup's write has."""
+    import threading
+
+    import cliqz_etl_spark.io as io_mod
+    import cliqz_etl_spark.pipelines.testpilot as testpilot
+    from cliqz_etl_spark.cli import cmd_run_day
+
+    extract_write, rollup_write = testpilot.write_parquet, io_mod.write_parquet
+    rollup_started = threading.Event()
+
+    def search_after_rollup(df, path, **kw):
+        if _dataset(path) == "search":
+            assert rollup_started.wait(30), "search write waited on the rollup"
+        return extract_write(df, path, **kw)
+
+    def signal_rollup(df, path, **kw):
+        if _dataset(path) == "profile_daily":
+            rollup_started.set()
+        return rollup_write(df, path, **kw)
+
+    monkeypatch.setattr(testpilot, "write_parquet", search_after_rollup)
+    monkeypatch.setattr(io_mod, "write_parquet", signal_rollup)
+    written = cmd_run_day(_run_day_args(day_inputs), spark=spark)["written"]
+    assert rollup_started.is_set()
+    assert written == {"testpilot": 1, "testpilottest": 1, "search": 1,
+                       "profile_daily": 1}
+
+
+def test_run_day_failed_write_raises_after_siblings(spark, day_inputs,
+                                                    monkeypatch):
+    """A failed testpilottest write raises out of run-day, but only after
+    its sibling writes finished: no rollup is written, no Spark job is
+    still running and no worker thread is left behind."""
+    import os
+    import threading
+    import time
+
+    import cliqz_etl_spark.pipelines.testpilot as testpilot
+    from cliqz_etl_spark.cli import cmd_run_day
+
+    real = testpilot.write_parquet
+    finished = []
+
+    def fail_testpilottest(df, path, **kw):
+        name = _dataset(path)
+        if name == "testpilottest":
+            raise RuntimeError("testpilottest write failed")
+        time.sleep(0.5)  # the failure comes first
+        out = real(df, path, **kw)
+        finished.append(name)
+        return out
+
+    monkeypatch.setattr(testpilot, "write_parquet", fail_testpilottest)
+    threads = threading.active_count()
+    with pytest.raises(RuntimeError, match="testpilottest write failed"):
+        cmd_run_day(_run_day_args(day_inputs), spark=spark)
+    assert sorted(finished) == ["search", "testpilot"]
+    assert threading.active_count() == threads
+    assert not os.path.exists(f"{day_inputs['base']}/cliqz_profile_daily")
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    assert sc.statusTracker().getActiveJobsIds() == []
+
+
+def test_threads_start_only_in_cli_with_spark_properties():
+    """Source scan: a thread pool or thread is started only in ``cli.py``,
+    and every task it submits there is wrapped by
+    ``inheritable_thread_target(spark)``, so no Spark job can run in a
+    thread that lost the caller's job group, description or tags. Test
+    files are exempt."""
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    starts = re.compile(r"ThreadPoolExecutor\(|\bThread\(")
+    hits = {str(p.relative_to(root)): len(starts.findall(p.read_text()))
+            for d in ("cliqz_etl_spark", "tools")
+            for p in sorted((root / d).rglob("*.py"))
+            if starts.search(p.read_text())}
+    assert hits == {"cliqz_etl_spark/cli.py": 1}, hits
+    cli = (root / "cliqz_etl_spark/cli.py").read_text()
+    calls = re.findall(r"\.(submit|map)\(\s*(\w+\(\w+\))?", cli)
+    assert calls == [("submit", "inheritable_thread_target(spark)")], calls
 
 
 def test_run_day_search_csv_columns_by_header(spark, day_inputs, tmp_path):
